@@ -202,18 +202,47 @@ def test_stats_without_probe_or_readback(spark, tmpdir_path):
     assert snap.summary["total_rows"] == t.read(include_tombstones=True).count()
 
 
+def _job_ids(spark):
+    """Ids of every job the context retains, whatever its job group."""
+    jvm = spark.sparkContext._jvm
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(
+        jvm.java.util.ArrayList())
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
 def test_mor_batch_is_exactly_one_job(spark, tmpdir_path):
     """The streaming steady state (dense MOR micro-batch) runs exactly ONE
-    Spark job: no probe, no empty-guard, no read-back."""
+    Spark job: no probe, no empty-guard, no read-back — both for a batch
+    handed in directly and for one delivered by a foreachBatch stream,
+    whose DataFrame lives in the stream's own session."""
+    from tinyetl_spark.sources.eventlog import append_events, \
+        stream_event_log
     t = make_table(spark, f"{tmpdir_path}/t", buckets=4)
-    ev = datagen.change_events(spark, 1000, 100, seed=5, hot_fraction=0.3)
+    ev = datagen.change_events(spark, 1500, 150, seed=5, hot_fraction=0.3)
     merge_apply(t, ev.filter("event_seq < 500"), 0)
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-    s = merge_apply(t, ev.filter("event_seq >= 500"), 1, mode="mor")
-    jobs_after = set(tracker.getJobIdsForGroup(None) or [])
+    jobs_before = _job_ids(spark)
+    s = merge_apply(t, ev.filter("event_seq >= 500 and event_seq < 1000"),
+                    1, mode="mor")
+    jobs_after = _job_ids(spark)
     assert s.strategy == "mor" and s.events_in == 500
     assert len(jobs_after - jobs_before) == 1
+
+    append_events(ev.filter("event_seq >= 1000"), f"{tmpdir_path}/log")
+    streamed = []
+
+    def apply_batch(batch_df, batch_id):
+        before = _job_ids(spark)
+        st = merge_apply(LakeTable(spark, t.root), batch_df, batch_id,
+                         stream_id="streamed", mode="mor")
+        streamed.append((st, len(_job_ids(spark) - before)))
+
+    (stream_event_log(spark, f"{tmpdir_path}/log").writeStream
+     .foreachBatch(apply_batch)
+     .option("checkpointLocation", f"{tmpdir_path}/ck")
+     .trigger(availableNow=True).start().awaitTermination())
+    [(st, n_jobs)] = streamed
+    assert st.strategy == "mor" and st.events_in == 500
+    assert n_jobs == 1
     assert_state_equal(t, ev)
 
 

@@ -27,12 +27,15 @@ Two write strategies, chosen per batch (``mode='auto'``):
   rewrites the whole table every micro-batch (copy-on-write amplification).
 
 The hot path is tuned to exactly ONE Spark job per dense MOR micro-batch
-— the streaming steady state — (driver fixed costs and job-submission
-latency are the scaling ceiling of a streaming pipeline — measured
-1-2 s/batch of serial section at round 1, capping N->4N core-scaling
-efficiency at 0.52); a dense COPY-ON-WRITE batch (the periodic
-delta-absorbing rewrite) adds one limit-1 ``isEmpty`` guard job so an
-empty micro-batch can never trigger a full-table rewrite:
+— the streaming steady state — whether the batch comes straight from a
+caller or from a ``foreachBatch`` stream, because the write turns AQE off
+in the session that owns the plan (with AQE on, the shuffle map stage
+runs as a job of its own). Driver fixed costs and job-submission latency
+are the scaling ceiling of a streaming pipeline (measured 1-2 s/batch of
+serial section at round 1, capping N->4N core-scaling efficiency at
+0.52). A dense COPY-ON-WRITE batch (the periodic delta-absorbing rewrite)
+into a table larger than the previous batch adds one limit-1 ``isEmpty``
+guard job so an empty micro-batch can never trigger a full-table rewrite:
 
 - the old per-batch histogram/count probe job is gone on the dense path
   (touch-all is assumed; it is a superset and always correct);
@@ -373,8 +376,10 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # ---- THE job (ONE linear pipeline, ONE shuffle, no caching):
     # [current(touched) ∪] batch -> repartition by bucket -> sort within
     # partitions by (url ASC, warc_ts DESC, event_seq DESC, _src ASC) ->
-    # one vectorized mapInPandas pass doing LWW-dedup + text extraction
-    # for winning batch rows -> parquet write with NO second shuffle.
+    # LWW dedup as a JVM lag() window over that same order -> one
+    # vectorized mapInPandas pass over the winners only (text extraction
+    # for winning batch rows + per-bucket stats) -> parquet write with NO
+    # second shuffle.
     #
     # Design note: expressing LWW as Window.partitionBy(url) forces a
     # second exchange (Catalyst can't prove hash(bucket(url)) clusters
@@ -522,7 +527,10 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     out = winners.select(*out_cols).mapInPandas(stats_extract, schema=out_schema)
     out_dir = table.new_data_dir(snap.version + 1)
     mark("plan_built")
-    sess = table.spark
+    # toggle AQE in the plan's own session: a foreachBatch DataFrame
+    # belongs to the stream's cloned session, which table.spark's conf
+    # does not reach
+    sess = out.sparkSession
     aqe_before = sess.conf.get("spark.sql.adaptive.enabled", "true")
     try:
         # fixed-shape query (explicit repartition, fixed slot count): AQE
