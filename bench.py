@@ -660,13 +660,11 @@ def run_commit_cost(cores: int) -> dict:
     """Commit-cost flatness check: driver bookkeeping (manifest read +
     snapshot commit) must stay O(num_buckets) and well below the data
     write at the documented 100 TB bucket count (4096) — measured via the
-    TINYETL_MERGE_TIMING segments of a seed copy-on-write merge and a
+    ``MergeStats.profile`` segments of a seed copy-on-write merge and a
     steady-state MOR merge, at 32 and at 4096 buckets."""
     sys.path.insert(0, REPO)
-    os.environ["TINYETL_MERGE_TIMING"] = "1"
     from tinyetl_spark import datagen
-    from tinyetl_spark.lake import LakeTable
-    from tinyetl_spark.lake import merge as merge_mod
+    from tinyetl_spark.lake import LakeTable, merge_apply
     from tinyetl_spark.schema import PAGES_SCHEMA
     from tinyetl_spark.session import get_spark
 
@@ -684,11 +682,9 @@ def run_commit_cost(cores: int) -> dict:
         try:
             t = LakeTable.create(spark, f"{work}/t", PAGES_SCHEMA,
                                  key_col="url", num_buckets=nb)
-            merge_mod.merge_apply(t, ev.filter("event_seq < 500000"), 0)
-            seed = dict(merge_mod.LAST_TIMING or {})
-            merge_mod.merge_apply(t, ev.filter("event_seq >= 500000"), 1,
-                                  mode="mor")
-            mor = dict(merge_mod.LAST_TIMING or {})
+            seed = merge_apply(t, ev.filter("event_seq < 500000"), 0).profile
+            mor = merge_apply(t, ev.filter("event_seq >= 500000"), 1,
+                              mode="mor").profile
             out[str(nb)] = {"seed_cow_segments_s": seed,
                             "mor_segments_s": mor}
         finally:

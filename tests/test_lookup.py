@@ -40,6 +40,49 @@ def test_lookup_equals_full_filter_and_prunes_files(spark, tmpdir_path):
     assert t.lookup("https://nowhere.example/absent").count() == 0
 
 
+def _input_records(spark):
+    """{stage id: records read from storage} for every stage the status
+    store retains."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList())
+    return {stages.apply(i).stageId(): stages.apply(i).inputRecords()
+            for i in range(stages.size())}
+
+
+def test_lookup_bloom_skips_merge_written_files(spark, tmpdir_path):
+    """After copy-on-write merges only, a lookup of an absent key that
+    sorts INSIDE its bucket file's url min/max reads no records: row-group
+    min/max cannot rule the key out, the key bloom filter the merge wrote
+    does."""
+    t = LakeTable.create(spark, f"{tmpdir_path}/t", PAGES_SCHEMA,
+                         key_col="url", num_buckets=4)
+    ev = datagen.change_events(spark, 2000, 300, seed=23)
+    merge_apply(t, ev.filter("event_seq < 1000"), 0, mode="cow")
+    merge_apply(t, ev.filter("event_seq >= 1000"), 1, mode="cow")
+    snap = t.snapshot()
+    assert not any(f.get("delta") for f in snap.files)
+    f = snap.files[0]
+    (b,) = f["buckets"]
+    rows = spark.read.parquet(f["path"]).select("url", "_deleted").collect()
+    urls = sorted(r["url"] for r in rows)
+    absent = next(c for c in (f"{urls[0]}-absent-{i}" for i in range(1000))
+                  if bucket_of(c, 4) == b and c < urls[-1])
+    assert absent not in urls
+
+    before = _input_records(spark)
+    assert t.lookup(absent).collect() == []
+    after = _input_records(spark)
+    new = {sid: n for sid, n in after.items() if sid not in before}
+    assert new                               # the lookup did scan
+    assert sum(new.values()) == 0
+    # a live key in the same file is still found
+    live = next(r["url"] for r in rows if not r["_deleted"])
+    assert [r["url"] for r in t.lookup(live).collect()] == [live]
+
+
 def test_lookup_resolves_mor_deltas(spark, tmpdir_path):
     """A key whose newest version lives in a merge-on-read delta file
     must come back resolved, not as the stale base row."""

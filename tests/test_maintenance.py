@@ -122,6 +122,34 @@ def test_compact_deltas_absorbs_debt_only_touching_dirty_buckets(
         include_tombstones=True).count()
 
 
+def _jobs(spark):
+    """{job id: job name (its call site)} for every job the context
+    retains."""
+    jvm = spark.sparkContext._jvm
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(
+        jvm.java.util.ArrayList())
+    return {jobs.apply(i).jobId(): jobs.apply(i).name()
+            for i in range(jobs.size())}
+
+
+def test_compact_deltas_job_budget(spark, tmpdir_path):
+    """compact_deltas is one read-resolve-route-write pass: at most 2
+    Spark jobs and no collect() read-back of the files it wrote (the
+    manifest comes from their footers)."""
+    t = LakeTable.create(spark, f"{tmpdir_path}/t", PAGES_SCHEMA,
+                         key_col="url", num_buckets=8)
+    ev = datagen.change_events(spark, 1200, 200, seed=17)
+    merge_apply(t, ev.filter("event_seq < 600"), 0)
+    merge_apply(t, ev.filter("event_seq >= 600"), 1, mode="mor")
+    assert any(f.get("delta") for f in t.snapshot().files)
+    before = _jobs(spark)
+    t.compact_deltas()
+    new = {j: n for j, n in _jobs(spark).items() if j not in before}
+    assert 1 <= len(new) <= 2, new
+    assert not any(n.startswith("collect") for n in new.values()), new
+    assert not any(f.get("delta") for f in t.snapshot().files)
+
+
 def test_compact_deltas_noop_and_fence_survival(spark, tmpdir_path):
     """No deltas -> no new snapshot; and the epoch fence survives the
     maintenance commit so a replayed batch still fences out."""

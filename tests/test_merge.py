@@ -144,10 +144,92 @@ def test_merge_stats_and_lineage(spark, tmpdir_path):
     assert sum(e["events"] for e in snap.lineage) == s.upserts + s.deletes
 
 
+def assert_manifest_matches_files(spark, snap):
+    """Every manifest entry's bucket set, ``rows`` and ``ts_range`` equal a
+    Spark recount of its file (groupBy(input_file_name(), _bucket)), and
+    every non-empty data file the commit wrote is listed."""
+    import os
+
+    import pyarrow.parquet as pq
+    paths = [f["path"] for f in snap.files]
+    got: dict[str, dict] = {}
+    for r in (spark.read.schema("_bucket long, warc_ts timestamp")
+              .parquet(*paths)
+              .groupBy(F.input_file_name().alias("file"), "_bucket")
+              .agg(F.count("*").alias("rows"),
+                   F.min(F.unix_micros("warc_ts")).alias("lo"),
+                   F.max(F.unix_micros("warc_ts")).alias("hi"))
+              .collect()):
+        path = r["file"][7:] if r["file"].startswith("file://") \
+            else r["file"]
+        g = got.setdefault(path, {"buckets": [], "rows": 0, "lo": [],
+                                  "hi": []})
+        g["buckets"].append(r["_bucket"])
+        g["rows"] += r["rows"]
+        g["lo"].append(r["lo"])
+        g["hi"].append(r["hi"])
+    assert sorted(got) == sorted(paths)
+    for entry in snap.files:
+        g = got[entry["path"]]
+        assert sorted(g["buckets"]) == entry["buckets"], entry["path"]
+        assert g["rows"] == entry["rows"], entry["path"]
+        assert [min(g["lo"]), max(g["hi"])] == entry["ts_range"], \
+            entry["path"]
+    # the directories this commit wrote (the writer names them after the
+    # snapshot version) hold no data file the manifest misses
+    for d in {os.path.dirname(p) for p in paths}:
+        if not os.path.basename(d).startswith(f"snap-{snap.version}-"):
+            continue
+        on_disk = {os.path.join(d, fn) for fn in os.listdir(d)
+                   if fn.endswith(".parquet")
+                   and pq.read_metadata(os.path.join(d, fn)).num_rows}
+        assert on_disk <= set(paths), f"unlisted data file in {d}"
+
+
+def _hot_bucket_batches(spark, num_buckets=4):
+    """One hot domain funnelled into one bucket: returns (hot_bucket,
+    {bucket: urls}, mk) where ``mk(seq0)`` builds a batch of 8 events per
+    hot url and 1 per cold url."""
+    from datetime import datetime, timedelta
+    cand = (spark.range(0, 400)
+            .select(F.concat(F.lit("https://hot.example.com/p/"),
+                             F.col("id")).alias("url"))
+            .withColumn("b", F.pmod(F.xxhash64("url"),
+                                    F.lit(num_buckets))))
+    by_bucket: dict[int, list[str]] = {}
+    for r in cand.collect():
+        by_bucket.setdefault(int(r["b"]), []).append(r["url"])
+    hot_bucket, hot_urls = max(by_bucket.items(), key=lambda kv: len(kv[1]))
+    hot_urls = hot_urls[:90]
+    cold_urls = [u for b, us in by_bucket.items() if b != hot_bucket
+                 for u in us[:10]]
+    base = datetime(2025, 1, 1)
+    sch = ("event_seq long, url string, warc_ts timestamp, op string, "
+           "html binary, lang string")
+
+    def mk(seq0):
+        rows, s = [], seq0
+        for u in hot_urls:                     # 8 events per hot url
+            for _ in range(8):
+                rows.append((s, u, base + timedelta(seconds=s), "update",
+                             b"<p>hot page</p>", "en"))
+                s += 1
+        for u in cold_urls:                    # 1 event per cold url
+            rows.append((s, u, base + timedelta(seconds=s), "update",
+                         b"<p>cold page</p>", "en"))
+            s += 1
+        return spark.createDataFrame(rows, sch)
+
+    return hot_bucket, by_bucket, mk
+
+
 def test_slot_mapping_matches_files(spark, tmpdir_path):
-    """The manifest is computed arithmetically (each bucket ROUTED to a
-    chosen partition via an inverse-murmur3 key) with per-slot accumulator
-    stats — verify against what is physically in each file."""
+    """Every writer's manifest — merge copy-on-write, merge-on-read and a
+    skew-split merge, compact (plain and time-clustered), compact_deltas,
+    rescale_buckets and overwrite — equals what is physically in each
+    file. Buckets come from the routing (each bucket ROUTED to a chosen
+    partition via an inverse-murmur3 key), rows and ts_range from the
+    parquet footer."""
     from tinyetl_spark.partitioning import inverse_slot_keys, murmur3_long
     # murmur3_long == Spark's F.hash on longs (inverse_slot_keys relies on it)
     vals = list(range(64)) + [-7, 1 << 40]
@@ -165,20 +247,42 @@ def test_slot_mapping_matches_files(spark, tmpdir_path):
         assert {r["k"]: r["p"] for r in rows} == dict(zip(keys, range(slots)))
 
     t = make_table(spark, f"{tmpdir_path}/t", buckets=8)
-    ev = datagen.change_events(spark, 2000, 300, seed=11)
-    merge_apply(t, ev, 0)
+    ev = datagen.change_events(spark, 3000, 300, seed=11)
+    merge_apply(t, ev.filter("event_seq < 2000"), 0)
     snap = t.snapshot()
+    assert_manifest_matches_files(spark, snap)
     for entry in snap.files:
-        got_rows = spark.read.parquet(entry["path"])
-        bks = sorted(r["_bucket"] for r in
-                     got_rows.select("_bucket").distinct().collect())
-        assert bks == entry["buckets"], f"bucket set wrong for {entry['path']}"
-        assert got_rows.count() == entry["rows"]
         # COW bijection: one bucket = one partition = one file, and the
         # seed merge routes bucket b to partition index b
-        assert len(bks) == 1
+        assert len(entry["buckets"]) == 1
         k = int(entry["path"].rsplit("/", 1)[1].split("-")[1])
-        assert bks == [k]
+        assert entry["buckets"] == [k]
+
+    merge_apply(t, ev.filter("event_seq >= 2000 and event_seq < 2500"), 1,
+                mode="cow")
+    assert_manifest_matches_files(spark, t.snapshot())
+    merge_apply(t, ev.filter("event_seq >= 2500"), 2, mode="mor")
+    snap = t.snapshot()
+    assert any(f.get("delta") for f in snap.files)
+    assert_manifest_matches_files(spark, snap)
+    for rewrite in (t.compact_deltas, t.compact,
+                    lambda: t.compact(cluster_by_ts=True, files_per_bucket=2),
+                    lambda: t.rescale_buckets(16),
+                    lambda: t.overwrite(t.read(include_tombstones=True))):
+        snap = rewrite()
+        assert not any(f.get("delta") for f in snap.files)
+        assert all(len(f["buckets"]) == 1 for f in snap.files)
+        assert_manifest_matches_files(spark, snap)
+    assert_state_equal(t, ev)
+
+    # skew split: the hot bucket's rows are spread over several files
+    t2 = make_table(spark, f"{tmpdir_path}/t2", buckets=4)
+    hot_bucket, _, mk = _hot_bucket_batches(spark)
+    merge_apply(t2, mk(0), 0)
+    merge_apply(t2, mk(1_000_000), 1)
+    snap = t2.snapshot()
+    assert len([f for f in snap.files if hot_bucket in f["buckets"]]) >= 2
+    assert_manifest_matches_files(spark, snap)
 
 
 def test_stats_without_probe_or_readback(spark, tmpdir_path):
@@ -200,6 +304,25 @@ def test_stats_without_probe_or_readback(spark, tmpdir_path):
     assert_state_equal(t, ev)
     snap = t.snapshot()
     assert snap.summary["total_rows"] == t.read(include_tombstones=True).count()
+
+
+def test_merge_profile_always_recorded(spark, tmpdir_path):
+    """Every merge records its driver-side segment marks in
+    MergeStats.profile; the commit summary carries the marks taken before
+    the commit, and the segments sum to at most the call's wall time."""
+    import time
+    t = make_table(spark, f"{tmpdir_path}/t", buckets=4)
+    ev = datagen.change_events(spark, 600, 80, seed=3)
+    t0 = time.time()
+    s = merge_apply(t, ev, 0)
+    wall = time.time() - t0
+    assert list(s.profile) == ["snapshot", "plan_built", "job_write",
+                               "commit"]
+    assert sum(s.profile.values()) <= wall + 0.005    # 3-decimal rounding
+    assert t.snapshot().summary["profile"] == {
+        k: v for k, v in s.profile.items() if k != "commit"}
+    replay = merge_apply(t, ev, 0)
+    assert replay.fenced and list(replay.profile) == ["snapshot"]
 
 
 def _job_ids(spark):
@@ -469,38 +592,8 @@ def test_hot_bucket_skew_split(spark, tmpdir_path):
     split fired (multiple files, all holding only the hot bucket), the
     splits are balanced, and LWW state still equals the brute-force
     oracle (url -> salt is functional, so winner locality is preserved)."""
-    from datetime import datetime, timedelta
-
     t = make_table(spark, f"{tmpdir_path}/t", buckets=4)
-    # craft the skew: find which bucket each candidate url hashes into
-    cand = (spark.range(0, 400)
-            .select(F.concat(F.lit("https://hot.example.com/p/"),
-                             F.col("id")).alias("url"))
-            .withColumn("b", F.pmod(F.xxhash64("url"), F.lit(4))))
-    by_bucket: dict[int, list[str]] = {}
-    for r in cand.collect():
-        by_bucket.setdefault(int(r["b"]), []).append(r["url"])
-    hot_bucket, hot_urls = max(by_bucket.items(), key=lambda kv: len(kv[1]))
-    hot_urls = hot_urls[:90]
-    cold_urls = [u for b, us in by_bucket.items() if b != hot_bucket
-                 for u in us[:10]]
-    base = datetime(2025, 1, 1)
-    sch = ("event_seq long, url string, warc_ts timestamp, op string, "
-           "html binary, lang string")
-
-    def mk(seq0):
-        rows, s = [], seq0
-        for u in hot_urls:                     # 8 events per hot url
-            for _ in range(8):
-                rows.append((s, u, base + timedelta(seconds=s), "update",
-                             b"<p>hot page</p>", "en"))
-                s += 1
-        for u in cold_urls:                    # 1 event per cold url
-            rows.append((s, u, base + timedelta(seconds=s), "update",
-                         b"<p>cold page</p>", "en"))
-            s += 1
-        return spark.createDataFrame(rows, sch)
-
+    hot_bucket, by_bucket, mk = _hot_bucket_batches(spark)
     b0, b1 = mk(0), mk(1_000_000)
     merge_apply(t, b0, 0)                      # records the skewed lineage
     lin = {r["bucket"]: r["rows"] for r in t.snapshot().lineage}

@@ -52,15 +52,25 @@ guard job so an empty micro-batch can never trigger a full-table rewrite:
   that traffic is the scaling-limiting resource;
 - ``events_in`` rides the scan as an observed metric (df.observe), so
   even the batch-size count costs no job;
-- the old read-back job is gone: merge stats and per-bucket lineage ride
-  a per-slot accumulator SNAPSHOT (the fused pass registers its slot's
-  stats once; a retried task *replaces* its slot entry instead of adding,
-  so stats stay exact under retries), and the file->buckets manifest is
-  computed arithmetically — each bucket is ROUTED to a chosen partition
-  via an inverse-murmur3 key (a driver-side bit-exact replica of Spark's
-  HashPartitioning picks the key; see tests/test_merge.py::
-  test_slot_mapping_matches_files), so partitions are evenly loaded (COW:
-  one bucket = one partition = one file) instead of balls-in-bins.
+- no read-back job: merge stats and per-bucket lineage ride a per-slot
+  accumulator SNAPSHOT (the fused pass registers its slot's
+  ``[rows, events, deletes]`` per bucket once; a retried task *replaces*
+  its slot entry instead of adding, so stats stay exact under retries).
+  Each bucket is ROUTED to a chosen partition via an inverse-murmur3 key
+  (a driver-side bit-exact replica of Spark's HashPartitioning picks the
+  key), so partitions are evenly loaded (COW: one bucket = one partition
+  = one file) instead of balls-in-bins. The write goes through
+  ``LakeTable.write_routed``, the one writer of table data: a file's
+  manifest entry lists the buckets routed to its slot that the stats pass
+  saw rows for, and takes its row count and ``warc_ts`` zone map from the
+  parquet footer (see tests/test_merge.py::
+  test_slot_mapping_matches_files). Every file carries a key bloom
+  filter, so ``lookup`` skips row groups of merge-written files too.
+
+Every call records its driver-side segment marks (``snapshot``,
+``plan_built``, ``job_write``, ``commit``, and ``job1_probe`` /
+``job_empty_guard`` when those jobs run) in ``MergeStats.profile``; the
+commit summary carries the marks taken before the commit.
 
 Untouched buckets' files carry over into the new snapshot unchanged.
 The atomic snapshot commit carries the (stream_id -> batch_id) epoch fence
@@ -74,10 +84,8 @@ LWW over (warc_ts, event_seq) is idempotent.
 from __future__ import annotations
 
 import math
-import os
-import re
 import time
-from dataclasses import dataclass, asdict
+from dataclasses import asdict, dataclass, field
 from typing import Any
 
 import pyspark.sql.functions as F
@@ -85,8 +93,8 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from tinyetl_spark.lake.table import LakeTable, conform
-from tinyetl_spark.partitioning import inverse_slot_keys
+from tinyetl_spark.lake.table import (LakeTable, bucket_closure, conform,
+                                     slotkey_column)
 
 
 @dataclass
@@ -105,6 +113,8 @@ class MergeStats:
     # set by the pipeline's dead-letter split (streaming/quarantine.py),
     # not by merge_apply itself: rows diverted BEFORE the merge saw them
     events_quarantined: int = 0
+    # driver-side segment durations of this call, {label: seconds}
+    profile: dict[str, float] = field(default_factory=dict)
 
     def to_dict(self) -> dict[str, Any]:
         return asdict(self)
@@ -112,11 +122,6 @@ class MergeStats:
 
 FENCE_PREFIX = "fence."
 LAST_IN_PROP = "last_events_in"
-
-# segment durations of the most recent timed merge_apply in this process
-# ({label: seconds}; populated when TINYETL_MERGE_TIMING=1) — lets the
-# bench read commit/bookkeeping cost without parsing stdout
-LAST_TIMING: dict[str, float] | None = None
 
 
 class _SlotStatsParam(AccumulatorParam):
@@ -131,60 +136,6 @@ class _SlotStatsParam(AccumulatorParam):
     def addInPlace(self, a, b):
         a.update(b)
         return a
-
-
-# (num_b, slots, assignment, splits) -> the _slotkey Column. A
-# steady-state stream re-derives the SAME routing every dense batch;
-# building the long[] literal costs ~0.5 s of py4j transfer at
-# num_buckets=4096, so the Column (an unbound expression, safe to reuse
-# across DataFrames) is cached. Bounded: sparse batches with changing
-# touched-sets evict oldest.
-_SLOTKEY_CACHE: dict[tuple, Any] = {}
-
-
-def _slotkey_column(num_b: int, slots: int, bucket_slot: dict[int, int],
-                    splits: dict[int, list[int]] | None = None,
-                    key_col: str | None = None):
-    """Column routing each _bucket to its chosen shuffle partition:
-    element_at over a long[] literal of inverse-murmur3 keys (ONE Literal
-    node — a python-list literal becomes a num_b-child array() constructor
-    costing ~2.3 s of per-batch plan analysis at 4096 buckets).
-
-    ``splits`` spreads a HOT bucket over several partitions: its rows are
-    salted by ``pmod(xxhash64(key, 1), nsplit)`` onto the bucket's slot
-    list. The salt is a pure function of the KEY, so every key's rows
-    still land in exactly one sort partition — the LWW window needs no
-    cross-split resolution and the hot path stays one job. The salt hash
-    is SEEDED (extra lit(1) column) to decorrelate it from the bucket id
-    ``pmod(xxhash64(key), num_buckets)``: with the unseeded hash, any
-    nsplit dividing num_buckets (2/4/8/16 against power-of-two bucket
-    counts) makes the salt CONSTANT within a bucket — hash % nsplit is
-    fully determined by hash % num_buckets — and the skew split silently
-    routes every row back to one partition."""
-    splits = splits or {}
-    ck = (num_b, slots, tuple(sorted(bucket_slot.items())),
-          tuple(sorted((b, tuple(sl)) for b, sl in splits.items())), key_col)
-    col = _SLOTKEY_CACHE.get(ck)
-    if col is None:
-        import numpy as np
-        slot_keys = inverse_slot_keys(slots)
-        key_arr = np.zeros(num_b, dtype=np.int64)
-        for bkt, s in bucket_slot.items():
-            key_arr[bkt] = slot_keys[s]
-        col = (F.element_at(F.lit(key_arr), (F.col("_bucket") + 1).cast("int"))
-                .cast("long"))  # murmur3 hashLong, not hashInt
-        for bkt, slot_list in sorted(splits.items()):
-            sub_keys = np.array([slot_keys[s] for s in slot_list],
-                                dtype=np.int64)
-            sub = (F.pmod(F.xxhash64(F.col(key_col), F.lit(1)),
-                          F.lit(len(slot_list))) + 1).cast("int")
-            col = F.when(F.col("_bucket") == F.lit(bkt),
-                         F.element_at(F.lit(sub_keys), sub).cast("long")
-                         ).otherwise(col)
-        if len(_SLOTKEY_CACHE) >= 8:
-            _SLOTKEY_CACHE.pop(next(iter(_SLOTKEY_CACHE)))
-        _SLOTKEY_CACHE[ck] = col
-    return col
 
 
 def _skew_splits(snap, touched: set[int], threshold: float,
@@ -233,18 +184,20 @@ def dedup_batch(batch: DataFrame, key: str = "url") -> DataFrame:
 
 def _commit_zero_event(table: LakeTable, snap, stream_id: str, batch_id: int,
                        prev_active: int, table_rows: int,
-                       strategy: str) -> MergeStats:
+                       strategy: str, profile: dict[str, float]) -> MergeStats:
     """Fence-only commit for an empty micro-batch: carry every file over
     unchanged, advance the epoch fence, write no data."""
     committed = table.commit(
         files=snap.files,
         summary={"operation": "merge", "stream_id": stream_id,
                  "batch_id": batch_id, "events_in": 0,
-                 "active_buckets": prev_active, "total_rows": table_rows},
+                 "active_buckets": prev_active, "total_rows": table_rows,
+                 "profile": dict(profile)},
         properties={FENCE_PREFIX + stream_id: batch_id, LAST_IN_PROP: 0},
         expected_base=snap.version)
     return MergeStats(batch_id, 0, 0, 0, 0, 0, snap.num_buckets, 0.0,
-                      snapshot_version=committed.version, strategy=strategy)
+                      snapshot_version=committed.version, strategy=strategy,
+                      profile=profile)
 
 
 def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
@@ -279,12 +232,13 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     so LWW winner locality (and the one-job plan) is unchanged while a
     hot domain's bucket no longer serializes on one core. 0 disables.
     """
-    timing = os.environ.get("TINYETL_MERGE_TIMING") == "1"
-    tmarks = [("start", time.time())]
+    profile: dict[str, float] = {}
+    t_last = [time.time()]
 
     def mark(label):
-        if timing:
-            tmarks.append((label, time.time()))
+        now = time.time()
+        profile[label] = round(now - t_last[0], 3)
+        t_last[0] = now
 
     snap = table.snapshot()
     key = snap.key_col
@@ -294,7 +248,8 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # ---- epoch fence: skip replayed batches that already committed
     if batch_id <= last_committed_batch(table, stream_id):
         return MergeStats(batch_id, 0, 0, 0, 0, 0, num_b, 0.0,
-                          fenced=True, snapshot_version=snap.version)
+                          fenced=True, snapshot_version=snap.version,
+                          profile=profile)
 
     if transform_fn is not None:
         batch = transform_fn(batch)
@@ -334,8 +289,8 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
             #
             # The guard itself is SIZE-GATED (round 6): the limit-1 job
             # costs ~1 s of per-batch serial floor on a multi-executor
-            # cluster (scheduling + planning latency, measured via
-            # TINYETL_MERGE_TIMING on local-cluster[4,2,2048]) — pure
+            # cluster (scheduling + planning latency, measured via the
+            # merge's segment marks on local-cluster[4,2,2048]) — pure
             # dead weight on every steady-state batch of the 2-batch
             # replay shape. When the table holds fewer rows than the
             # previous batch delivered, the rewrite the guard prevents
@@ -347,31 +302,27 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
             # resets to 0 after any zero-event commit) — still runs the
             # guard on every batch.
             mark("job_empty_guard")
-            return _commit_zero_event(table, snap, stream_id, batch_id,
-                                      prev_active, table_rows, "cow")
+            stats = _commit_zero_event(table, snap, stream_id, batch_id,
+                                       prev_active, table_rows, "cow",
+                                       profile)
+            mark("commit")
+            return stats
     else:
         pre = (batch.groupBy(table.bucket_expr().alias("b")).count().collect())
         events_in = sum(int(r["count"]) for r in pre)
         touched = {int(r["b"]) for r in pre}
         mark("job1_probe")
         if events_in == 0:
-            return _commit_zero_event(table, snap, stream_id, batch_id,
-                                      prev_active, table_rows, "cow")
+            stats = _commit_zero_event(table, snap, stream_id, batch_id,
+                                       prev_active, table_rows, "cow",
+                                       profile)
+            mark("commit")
+            return stats
 
     if not use_mor:
-        # touch-closure: a data file may hold >1 bucket (slot collisions);
-        # rewriting bucket 5 out of a {5,9} file requires rewriting bucket
-        # 9 too, else 9's rows would survive in both old and new files.
-        # Fixpoint over the manifest's bucket-sets (driver-side, tiny).
-        while True:
-            grown = set(touched)
-            for f in snap.files:
-                bs = set(f["buckets"])
-                if bs & grown:
-                    grown |= bs
-            if grown == touched:
-                break
-            touched = grown
+        # a MOR delta may hold several buckets: rewriting one of them
+        # rewrites the file's others too
+        touched = bucket_closure(snap.files, touched)
 
     # ---- THE job (ONE linear pipeline, ONE shuffle, no caching):
     # [current(touched) ∪] batch -> repartition by bucket -> sort within
@@ -443,9 +394,9 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # events_in rides the scan as an observed metric — no counting job.
     unioned = (unioned_src
                .withColumn("_bucket", table.bucket_expr())
-               .withColumn("_slotkey", _slotkey_column(num_b, slots,
-                                                       bucket_slot,
-                                                       splits, key))
+               .withColumn("_slotkey", slotkey_column(num_b, slots,
+                                                      bucket_slot,
+                                                      splits, key))
                .observe(obs, F.sum("_src").cast("long").alias("events_in"))
                .repartition(slots, "_slotkey")
                .sortWithinPartitions(F.col("_slotkey").asc(),
@@ -484,18 +435,10 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
 
     acc = table.spark.sparkContext.accumulator({}, _SlotStatsParam())
 
-    has_ts = "warc_ts" in schema_cols
-
     def stats_extract(batches):
-        import pandas as pd
         from pyspark import TaskContext
         from tinyetl_spark.extract import extract_series
         stats: dict[int, list] = {}
-
-        def bucket_stats(bkt):
-            # rows, events, deletes, ts_min_us, ts_max_us (zone map)
-            return stats.setdefault(int(bkt), [0, 0, 0, None, None])
-
         for keep in batches:
             if len(keep) == 0:
                 continue
@@ -508,39 +451,25 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
             kd = kb & keep["_deleted"].fillna(False).astype(bool)
             grp = keep.groupby("_bucket", sort=False)
             for bkt, idx in grp.indices.items():
-                s = bucket_stats(bkt)
+                s = stats.setdefault(int(bkt), [0, 0, 0])
                 s[0] += len(idx)
                 s[1] += int(kb.iloc[idx].sum())
                 s[2] += int(kd.iloc[idx].sum())
-                if has_ts:
-                    tsv = keep["warc_ts"].iloc[idx]
-                    mn, mx = tsv.min(), tsv.max()
-                    if pd.notna(mn):
-                        mni = int(pd.Timestamp(mn).value // 1000)
-                        mxi = int(pd.Timestamp(mx).value // 1000)
-                        s[3] = mni if s[3] is None else min(s[3], mni)
-                        s[4] = mxi if s[4] is None else max(s[4], mxi)
             yield keep[out_cols]
         tc = TaskContext.get()
         acc.add({int(tc.partitionId()): stats})
 
     out = winners.select(*out_cols).mapInPandas(stats_extract, schema=out_schema)
-    out_dir = table.new_data_dir(snap.version + 1)
+    # expected rows per file, for the bloom filters: the batch plus, under
+    # copy-on-write, the touched buckets' current rows
+    est_rows = (events_in or prev_in) + (0 if use_mor else sum(
+        int(f.get("rows") or 0) for f in snap.files
+        if set(f["buckets"]) & touched))
     mark("plan_built")
-    # toggle AQE in the plan's own session: a foreachBatch DataFrame
-    # belongs to the stream's cloned session, which table.spark's conf
-    # does not reach
-    sess = out.sparkSession
-    aqe_before = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        # fixed-shape query (explicit repartition, fixed slot count): AQE
-        # cannot improve it, its per-stage re-planning adds latency to
-        # every micro-batch, and partition coalescing would break the
-        # slot->file index arithmetic below.
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        out.write.mode("append").parquet(out_dir)
-    finally:
-        sess.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    # a file's buckets: those the stats pass saw rows of in its slot
+    new_entries = table.write_routed(
+        out, snap, table.new_data_dir(snap.version + 1),
+        lambda k: list(acc.value[k]), est_rows / slots, delta=use_mor)
     mark("job_write")
 
     # ---- driver-side bookkeeping: NO extra Spark job.
@@ -548,12 +477,9 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     per_bucket: dict[int, list] = {}
     for st in slot_stats.values():
         for bkt, s in st.items():
-            agg = per_bucket.setdefault(bkt, [0, 0, 0, None, None])
+            agg = per_bucket.setdefault(bkt, [0, 0, 0])
             for i in range(3):
                 agg[i] += s[i]
-            if len(s) > 3 and s[3] is not None:
-                agg[3] = s[3] if agg[3] is None else min(agg[3], s[3])
-                agg[4] = s[4] if agg[4] is None else max(agg[4], s[4])
     # slot_stats empty <=> the write job ran ZERO tasks (a zero-partition
     # micro-batch: availableNow + maxFilesPerTrigger can deliver a log
     # segment holding no rows). With no task, the Observation never
@@ -564,51 +490,14 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     if events_in is None:
         events_in = int(observed or 0)
     if use_mor and events_in == 0:
-        # the single job scanned only the (empty) batch; drop the empty
-        # delta files instead of committing read-amplifying delta debt
-        import shutil
-        shutil.rmtree(out_dir, ignore_errors=True)
-        return _commit_zero_event(table, snap, stream_id, batch_id,
-                                  prev_active, table_rows, "mor")
+        # the single job scanned only the (empty) batch and wrote no delta
+        stats = _commit_zero_event(table, snap, stream_id, batch_id,
+                                   prev_active, table_rows, "mor", profile)
+        mark("commit")
+        return stats
     applied = sum(s[1] for s in per_bucket.values())
     deletes = sum(s[2] for s in per_bucket.values())
     written_rows = sum(s[0] for s in per_bucket.values())
-
-    # manifest entries: part-file index == shuffle partition index (plain
-    # parquet write, one file per non-empty partition), and the buckets of
-    # slot k are exactly those routed there: bucket_slot[bkt] == k.
-    new_entries = []
-    for fn in sorted(os.listdir(out_dir)):
-        if not fn.endswith(".parquet"):
-            continue
-        m = re.match(r"part-(\d+)-", fn)
-        if not m:
-            continue
-        k = int(m.group(1))
-        st = slot_stats.get(k)
-        ts_range = None
-        if st is not None:
-            bs = sorted(bkt for bkt, s in st.items() if s[0] > 0)
-            rows = sum(s[0] for s in st.values())
-            los = [s[3] for s in st.values() if len(s) > 3 and s[3] is not None]
-            his = [s[4] for s in st.values() if len(s) > 3 and s[4] is not None]
-            if los:
-                ts_range = [min(los), max(his)]
-        else:  # accumulator lost (shouldn't happen) -> correct superset
-            bs = sorted(bkt for bkt in touched
-                        if any(pair_slot[(bkt, j)] == k
-                               for j in range(nsplit.get(bkt, 1))))
-            rows = 0
-        entry = {"path": os.path.join(out_dir, fn), "buckets": bs,
-                 "rows": rows, "schema_version": snap.schema_version}
-        if ts_range is not None:
-            # file-level zone map (epoch µs): readers prune whole files on
-            # warc_ts predicates without any IO — Iceberg column-stats
-            # analogue, maintained for free by the stats pass
-            entry["ts_range"] = ts_range
-        if use_mor:
-            entry["delta"] = True
-        new_entries.append(entry)
 
     if use_mor:
         carried = list(snap.files)
@@ -635,7 +524,7 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
         dedup_drops=events_in - applied, upserts=applied - deletes,
         deletes=deletes, touched_buckets=len(touched),
         total_buckets=num_b, skew_ratio=round(skew, 3),
-        strategy="mor" if use_mor else "cow")
+        strategy="mor" if use_mor else "cow", profile=profile)
     committed = table.commit(
         files=carried + new_entries,
         summary={"operation": "merge", "stream_id": stream_id,
@@ -646,11 +535,4 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
         lineage=lineage, expected_base=snap.version)
     stats.snapshot_version = committed.version
     mark("commit")
-    if timing:
-        global LAST_TIMING
-        LAST_TIMING = {lbl: round(t1 - t0, 3) for (_, t0), (lbl, t1)
-                       in zip(tmarks, tmarks[1:])}
-        segs = ", ".join(f"{lbl}={v:.2f}s" for lbl, v in LAST_TIMING.items())
-        print(f"[merge-timing] batch={batch_id} strategy={stats.strategy} {segs}",
-              flush=True)
     return stats

@@ -14,7 +14,15 @@ Layout on disk::
 
     <root>/metadata/v<N>.json     # immutable snapshot metadata
     <root>/metadata/VERSION       # current version pointer (atomic rename)
-    <root>/data/snap-<N>/_bucket=<k>/part-*.parquet
+    <root>/data/snap-<N>-<id>/part-<slot>-*.parquet
+
+Every data file is written by ``LakeTable.write_routed``: the writer's
+rows arrive routed so that shuffle partition k holds exactly slot k, and
+partition k becomes ``part-<k>-*``. A file's manifest entry takes its
+bucket set from that routing and its row count and ``warc_ts`` bounds
+from the parquet footer the write just closed. Each row also carries its
+bucket in a ``_bucket`` column (the residual filter for multi-bucket
+files); there are no Hive ``_bucket=<k>/`` directories.
 
 Concurrency: a commit creates ``v<N>.json`` with O_EXCL — two writers
 racing on the same version deterministically leaves exactly one winner
@@ -35,16 +43,21 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
 
 VERSION_FILE = "VERSION"
+# floor on a bloom filter's expected key count: a filter sized for 1000
+# keys is ~2 KB, and an estimate that comes in short (a first batch has no
+# previous batch size to go by) would otherwise saturate it
+BLOOM_MIN_NDV = 1000
 
 
 def walk_merge_commits(get_snapshot, start: int, end: int):
@@ -91,7 +104,10 @@ class Snapshot:
     schemas: dict[str, str]            # schema_version(str) -> StructType.json()
     num_buckets: int
     key_col: str
-    files: list[dict[str, Any]]        # {path, bucket, schema_version, rows}
+    # manifest: {path, buckets, rows, schema_version[, ts_range][, delta]}
+    # — buckets from the write's routing, rows and ts_range (warc_ts
+    # bounds, epoch µs) from the file's parquet footer
+    files: list[dict[str, Any]]
     summary: dict[str, Any]            # per-commit info (batch_id, stats, ...)
     properties: dict[str, Any]         # carried forward (stream fences, ...)
     parent: int | None = None
@@ -130,6 +146,104 @@ def conform(df: DataFrame, schema: StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+# (num_ids, slots, assignment, splits, key_col, id_col) -> the _slotkey
+# Column. A steady-state stream re-derives the SAME routing every dense
+# batch; building the long[] literal costs ~0.5 s of py4j transfer at
+# num_buckets=4096, so the Column (an unbound expression, safe to reuse
+# across DataFrames) is cached. Bounded: sparse batches with changing
+# touched-sets evict oldest.
+_SLOTKEY_CACHE: dict[tuple, Any] = {}
+
+
+def slotkey_column(num_ids: int, slots: int, id_slot: dict[int, int],
+                   splits: dict[int, list[int]] | None = None,
+                   key_col: str | None = None, id_col: str = "_bucket"):
+    """Column routing each ``id_col`` value to its chosen shuffle
+    partition: ``repartition(slots, "_slotkey")`` then sends id i to
+    partition ``id_slot[i]`` EXACTLY. Hash-repartitioning on the id itself
+    is balls-in-bins — ~1/e of partitions end up empty and 2-3 ids pile
+    onto others, so the straggler task idles the stage tail. The column is
+    element_at over a long[] literal of inverse-murmur3 keys (ONE Literal
+    node — a python-list literal becomes a num_ids-child array()
+    constructor costing ~2.3 s of per-batch plan analysis at 4096
+    buckets).
+
+    ``splits`` spreads a HOT id over several partitions: its rows are
+    salted by ``pmod(xxhash64(key, 1), nsplit)`` onto the id's slot list.
+    The salt is a pure function of the KEY, so every key's rows still land
+    in exactly one sort partition — the merge's LWW window needs no
+    cross-split resolution and its hot path stays one job. The salt hash
+    is SEEDED (extra lit(1) column) to decorrelate it from the bucket id
+    ``pmod(xxhash64(key), num_buckets)``: with the unseeded hash, any
+    nsplit dividing num_buckets (2/4/8/16 against power-of-two bucket
+    counts) makes the salt CONSTANT within a bucket — hash % nsplit is
+    fully determined by hash % num_buckets — and the skew split silently
+    routes every row back to one partition."""
+    splits = splits or {}
+    ck = (num_ids, slots, tuple(sorted(id_slot.items())),
+          tuple(sorted((b, tuple(sl)) for b, sl in splits.items())), key_col,
+          id_col)
+    col = _SLOTKEY_CACHE.get(ck)
+    if col is None:
+        import numpy as np
+
+        from tinyetl_spark.partitioning import inverse_slot_keys
+        slot_keys = inverse_slot_keys(slots)
+        key_arr = np.zeros(num_ids, dtype=np.int64)
+        for i, s in id_slot.items():
+            key_arr[i] = slot_keys[s]
+        col = (F.element_at(F.lit(key_arr), (F.col(id_col) + 1).cast("int"))
+                .cast("long"))  # murmur3 hashLong, not hashInt
+        for i, slot_list in sorted(splits.items()):
+            sub_keys = np.array([slot_keys[s] for s in slot_list],
+                                dtype=np.int64)
+            sub = (F.pmod(F.xxhash64(F.col(key_col), F.lit(1)),
+                          F.lit(len(slot_list))) + 1).cast("int")
+            col = F.when(F.col(id_col) == F.lit(i),
+                         F.element_at(F.lit(sub_keys), sub).cast("long")
+                         ).otherwise(col)
+        if len(_SLOTKEY_CACHE) >= 8:
+            _SLOTKEY_CACHE.pop(next(iter(_SLOTKEY_CACHE)))
+        _SLOTKEY_CACHE[ck] = col
+    return col
+
+
+def bucket_closure(files: list[dict[str, Any]], buckets: set[int]) -> set[int]:
+    """``buckets`` grown until no manifest file straddles its edge: a data
+    file may hold more than one bucket, so rewriting bucket 5 out of a
+    {5, 9} file means rewriting bucket 9 too, else 9's rows would survive
+    in both the old and the new file. Driver-side fixpoint."""
+    closed = set(buckets)
+    while True:
+        grown = set(closed)
+        for f in files:
+            bs = set(f["buckets"])
+            if bs & grown:
+                grown |= bs
+        if grown == closed:
+            return closed
+        closed = grown
+
+
+def _footer_ts_range(md) -> list[int] | None:
+    """[min, max] of ``warc_ts`` in epoch µs from a parquet footer's
+    column statistics (INT64 micros; see ``write_routed``), or None when
+    the file has no such column or no row group recorded bounds."""
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            col = rg.column(c)
+            if col.path_in_schema != "warc_ts":
+                continue
+            st = col.statistics
+            if (col.physical_type == "INT64" and st is not None
+                    and st.has_min_max):
+                lo = st.min_raw if lo is None else min(lo, st.min_raw)
+                hi = st.max_raw if hi is None else max(hi, st.max_raw)
+    return None if lo is None else [lo, hi]
 
 
 class LakeTable:
@@ -260,9 +374,9 @@ class LakeTable:
         side (pure-Python replica of pmod(xxhash64(key), N) —
         partitioning.bucket_of), so the scan touches only that bucket's
         files via manifest pruning, and the pushed equality predicate
-        lets the per-file key bloom filter (written by write_files) skip
-        row groups inside them. O(one bucket) IO on a 10^10-row table,
-        no job to plan the pruning."""
+        lets the key bloom filter that ``write_routed`` puts in every data
+        file skip row groups inside them. O(one bucket) IO on a 10^10-row
+        table, no job to plan the pruning."""
         from tinyetl_spark.partitioning import bucket_of
         snap = self.snapshot(version)
         b = bucket_of(key, snap.num_buckets)
@@ -365,7 +479,6 @@ class LakeTable:
             dirty = [f for f in files if f not in clean]
             if ts_range is not None:      # zone-prune CLEAN base files only
                 clean = [f for f in clean if _ts_overlaps(f)]
-            from pyspark.sql import Window
             w = Window.partitionBy(snap.key_col).orderBy(
                 F.col("warc_ts").desc(), F.col("event_seq").desc())
             resolved = (read_files(dirty)
@@ -503,111 +616,151 @@ class LakeTable:
         return os.path.join(self.data_dir,
                             f"snap-{snap_version}-{_uuid.uuid4().hex[:8]}")
 
-    def write_files(self, df_with_extras: DataFrame, out_dir: str,
-                    slots: int, buckets: set[int] | None = None,
-                    num_buckets: int | None = None) -> None:
-        """ONE linear job: route each ``_bucket`` to a CHOSEN partition
-        via inverse-murmur3 keys (hash-repartitioning on the bucket id
-        itself is balls-in-bins — ~1/e of partitions end up empty and
-        2-3 buckets pile onto others, so the straggler task idles the
-        stage tail) and write plain parquet. When ``buckets`` is given
-        (the writer knows exactly which buckets occur), they are ranked
-        into ``slots`` round-robin — a bijection when slots == count;
-        otherwise every possible bucket routes to ``bucket % slots``.
-        No Hive partitionBy — measured ~10x the cost of the write itself
-        for many small partitions; bucketing is recorded in the manifest
-        instead."""
-        from tinyetl_spark.lake.merge import _slotkey_column
-        nb = num_buckets or self.snapshot().num_buckets
-        if buckets is not None:
-            assign = {b: i % slots for i, b in enumerate(sorted(buckets))}
-        else:
-            assign = {b: b % slots for b in range(nb)}
-        # parquet bloom filter on the key column: within a bucket, files
-        # are NOT sorted by key (they're time-ordered), so row-group
-        # min/max stats can't prune a point lookup — the bloom can. At
-        # 10^10 rows / 4096 buckets a bucket spans several files (base +
-        # deltas + time-clustered slices); `lookup` prunes to the bucket
-        # via the manifest, the bloom then skips the row groups that
-        # can't hold the key. ~1.2 MB per file at the default NDV.
-        key_col = self.snapshot().key_col
-        ndv = os.environ.get("TINYETL_BLOOM_NDV", str(1 << 20))
-        (df_with_extras
-            .withColumn("_slotkey", _slotkey_column(nb, slots, assign))
-            .repartition(slots, "_slotkey")
-            .drop("_slotkey")
-            .write.mode("append")
-            .option(f"parquet.bloom.filter.enabled#{key_col}", "true")
-            .option(f"parquet.bloom.filter.expected.ndv#{key_col}", ndv)
-            .parquet(out_dir))
+    def write_routed(self, routed: DataFrame, snap: Snapshot, out_dir: str,
+                     buckets_of, rows_per_file: float, delta: bool = False
+                     ) -> list[dict[str, Any]]:
+        """THE writer of table data; returns the manifest entries of the
+        files it wrote into ``out_dir`` for the commit on top of ``snap``
+        (a write that produced no rows leaves no directory behind).
+        ``routed`` (table columns + ``_bucket``) is already
+        repartitioned so that shuffle partition k holds exactly slot k's
+        rows. The plain parquet write (no Hive partitionBy — measured ~10x
+        the cost of the write itself for many small partitions) turns
+        partition k into ``part-<k>-*.parquet``, and ``buckets_of(k)``,
+        called after the write, names the buckets in it. The rest of each
+        entry comes from the footer of the file just closed, as Iceberg
+        fills a data file's record count and bounds: ``rows`` from its row
+        count and ``ts_range`` from the ``warc_ts`` min/max statistics (the
+        file-level zone map ``read(ts_range=...)`` prunes on).
 
-    def readback_entries(self, out_dir: str,
-                         schema_version: int | None = None
-                         ) -> tuple[list[dict[str, Any]], DataFrame]:
-        """Manifest entries for freshly written files via a cheap columnar
-        read-back of just the ``_bucket`` column (+ a reusable per-file/
-        bucket aggregate frame for lineage/stats)."""
-        snap = self.snapshot()
-        sv = snap.schema_version if schema_version is None else schema_version
-        src = self.spark.read.parquet(out_dir)
-        aggs = [F.count("*").alias("rows")]
-        has_ts = "warc_ts" in src.columns
-        if has_ts:                     # keep the zone map through rewrites
-            aggs += [F.min("warc_ts").alias("ts_lo"),
-                     F.max("warc_ts").alias("ts_hi")]
-        rb = (src.groupBy(F.input_file_name().alias("file"),
-                          F.col("_bucket").alias("bucket"))
-              .agg(*aggs))
-        per_file: dict[str, dict[int, int]] = {}
-        ranges: dict[str, list] = {}
+        The write sets two confs in the plan's own session (a foreachBatch
+        DataFrame belongs to the stream's cloned session, which
+        ``self.spark``'s conf does not reach):
 
-        def _us(dt):
-            import datetime as _dt
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=_dt.timezone.utc)
-            return int(dt.timestamp() * 1_000_000)
+        - AQE off: the routing fixes the partition count, AQE's per-stage
+          re-planning only adds latency (with it on, each shuffle map
+          stage runs as a job of its own), and partition coalescing would
+          break part-k == slot k;
+        - INT64 microsecond timestamps: parquet records no statistics for
+          Spark's default INT96, so the footer would hold no zone map.
 
-        agg_rows = rb.collect()
-        for r in agg_rows:
-            path = r["file"]
-            path = path[7:] if path.startswith("file://") else path
-            per_file.setdefault(path, {})[int(r["bucket"])] = int(r["rows"])
-            if has_ts and r["ts_lo"] is not None:
-                lo, hi = _us(r["ts_lo"]), _us(r["ts_hi"])
-                tr = ranges.get(path)
-                ranges[path] = ([min(tr[0], lo), max(tr[1], hi)]
-                                if tr else [lo, hi])
+        Every file gets a bloom filter on the key column, sized to
+        ``rows_per_file``: within a bucket, files are time-ordered, not
+        key-sorted, so row-group min/max stats cannot prune a point
+        lookup — the bloom can (``lookup``)."""
+        import shutil
+
+        import pyarrow.parquet as pq
+        key = snap.key_col
+        sess = routed.sparkSession
+        confs = {"spark.sql.adaptive.enabled": "false",
+                 "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        before = {k: sess.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                sess.conf.set(k, v)
+            (routed.write.mode("append")
+                .option(f"parquet.bloom.filter.enabled#{key}", "true")
+                .option(f"parquet.bloom.filter.expected.ndv#{key}",
+                        str(max(int(rows_per_file), BLOOM_MIN_NDV)))
+                .parquet(out_dir))
+        finally:
+            for k, v in before.items():
+                if v is None:
+                    sess.conf.unset(k)
+                else:
+                    sess.conf.set(k, v)
         entries = []
-        for p, bs in per_file.items():
-            e = {"path": p, "buckets": sorted(bs),
-                 "rows": sum(bs.values()), "schema_version": sv}
-            if p in ranges:
-                e["ts_range"] = ranges[p]
-            entries.append(e)
-        return entries, rb
-
-    def write_data(self, df: DataFrame, snap_version: int,
-                   buckets_hint: int | None = None) -> list[dict[str, Any]]:
-        """Write df (already in current schema, WITHOUT bucket col) as data
-        files for the upcoming snapshot; returns manifest entries
-        ``{path, buckets, schema_version}``."""
-        snap = self.snapshot()
-        out_dir = self.new_data_dir(snap_version)
-        slots = buckets_hint or min(
-            snap.num_buckets,
-            max(2 * self.spark.sparkContext.defaultParallelism, 8))
-        self.write_files(df.withColumn("_bucket", self.bucket_expr()),
-                         out_dir, slots)
-        entries, _ = self.readback_entries(out_dir)
+        for fn in sorted(os.listdir(out_dir)):
+            m = re.match(r"part-(\d+)-.*\.parquet$", fn)
+            if not m:
+                continue
+            path = os.path.join(out_dir, fn)
+            md = pq.read_metadata(path)
+            if md.num_rows == 0:   # an all-empty job still writes one file
+                continue
+            entry = {"path": path, "buckets": sorted(buckets_of(int(m[1]))),
+                     "rows": md.num_rows,
+                     "schema_version": snap.schema_version}
+            ts_range = _footer_ts_range(md)
+            if ts_range is not None:
+                entry["ts_range"] = ts_range
+            if delta:
+                entry["delta"] = True
+            entries.append(entry)
+        if not entries:
+            shutil.rmtree(out_dir, ignore_errors=True)
         return entries
+
+    def _rewrite(self, df: DataFrame, snap: Snapshot, version: int,
+                 buckets: set[int] | None = None,
+                 num_buckets: int | None = None, cluster_by_ts: bool = False,
+                 files_per_bucket: int = 1) -> list[dict[str, Any]]:
+        """Write ``df`` (current schema, no ``_bucket``), a rewrite of
+        ``snap``'s data, as the files of snapshot ``version``: one file per
+        (bucket, slice), the copy-on-write layout every rewrite shares.
+        ``buckets`` (default: all ``num_buckets``) are the buckets ``df``
+        can hold; each gets its own slot, so the layout is a function of
+        the data, never of the cluster size. ``cluster_by_ts`` sorts each
+        file by ``warc_ts`` and splits each bucket into
+        ``files_per_bucket`` time-ranged slices (ntile over ``warc_ts``),
+        so the files' zone maps are disjoint."""
+        nb = num_buckets or snap.num_buckets
+        order = sorted(buckets) if buckets is not None else list(range(nb))
+        k = max(int(files_per_bucket), 1) if cluster_by_ts else 1
+        cid = F.col("_bucket")
+        if k > 1:
+            w = Window.partitionBy("_bucket").orderBy("warc_ts")
+            cid = cid * k + F.ntile(k).over(w) - 1
+        slots = max(len(order) * k, 1)
+        # composite (bucket b, slice j) id b*k+j -> slot rank(b)*k+j
+        cid_slot = {b * k + j: r * k + j
+                    for r, b in enumerate(order) for j in range(k)}
+        routed = (df.withColumn("_bucket", F.pmod(F.xxhash64(
+                        F.col(snap.key_col)), F.lit(nb)))
+                    .withColumn("_cid", cid)
+                    .withColumn("_slotkey", slotkey_column(
+                        nb * k, slots, cid_slot, id_col="_cid"))
+                    .repartition(slots, "_slotkey"))
+        if cluster_by_ts:
+            routed = routed.sortWithinPartitions("warc_ts")
+        est_rows = sum(int(f.get("rows") or 0) for f in snap.files
+                       if buckets is None or set(f["buckets"]) & buckets)
+        return self.write_routed(
+            routed.drop("_cid", "_slotkey"), snap,
+            self.new_data_dir(version), lambda s: [order[s // k]],
+            est_rows / slots)
+
+    def _commit_rewrite(self, snap: Snapshot, carried: list[dict[str, Any]],
+                        entries: list[dict[str, Any]],
+                        summary: dict[str, Any],
+                        num_buckets: int | None = None) -> Snapshot:
+        """Commit a rewrite against ``snap``. Carries the steady-state
+        signals (active_buckets, total_rows) so an out-of-band maintenance
+        pass doesn't knock the next merge's auto strategy back to the
+        sparse probe path; epoch-fence properties carry through ``commit``
+        so replay protection survives maintenance."""
+        summary = {**summary, "total_rows": sum(
+            int(f.get("rows") or 0) for f in carried + entries)}
+        summary.setdefault("active_buckets",
+                           snap.summary.get("active_buckets", 0))
+        return self.commit(files=carried + entries, summary=summary,
+                           expected_base=snap.version,
+                           num_buckets=num_buckets)
+
+    def write_data(self, df: DataFrame, snap_version: int
+                   ) -> list[dict[str, Any]]:
+        """Write df (already in current schema, WITHOUT bucket col) as data
+        files for snapshot ``snap_version``, one file per bucket; returns
+        their manifest entries."""
+        return self._rewrite(df, self.snapshot(), snap_version)
 
     def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> Snapshot:
         """Full-table replace (used for initial loads / compaction)."""
-        base_v = self.current_version()
-        entries = self.write_data(conform(df, self.snapshot().schema), base_v + 1)
-        return self.commit(files=entries,
-                           summary={"operation": "overwrite", **(summary or {})},
-                           expected_base=base_v)
+        snap = self.snapshot()
+        entries = self.write_data(conform(df, snap.schema), snap.version + 1)
+        return self._commit_rewrite(
+            snap, [], entries, {"operation": "overwrite", **(summary or {})})
 
     def expire_snapshots(self, keep_last: int = 10) -> dict[str, int]:
         """Retire old snapshots and delete data files no LIVE snapshot
@@ -642,69 +795,35 @@ class LakeTable:
                 "deleted_files": removed_files,
                 "oldest_kept": cutoff}
 
-    def compact(self, target_file_mb: int = 256,
-                cluster_by_ts: bool = False,
+    def compact(self, cluster_by_ts: bool = False,
                 files_per_bucket: int = 1) -> Snapshot:
-        """Rewrite all live data into one file-set — bounds small-file
-        accumulation from many micro-batch commits (Iceberg rewrite_data_files
-        analogue). Run out-of-band, not on the streaming hot path.
+        """Rewrite all live data one file per bucket — bounds small-file
+        accumulation from many micro-batch commits (Iceberg
+        rewrite_data_files analogue). Run out-of-band, not on the
+        streaming hot path.
 
         ``cluster_by_ts`` time-clusters the rewrite (Iceberg sort-order
         rewrite analogue): rows are sorted by ``warc_ts`` within each
-        bucket's output, so parquet row-group min/max stats let a pushed
-        time predicate skip row groups inside big files. With
+        output file, so parquet row-group min/max stats let a pushed time
+        predicate skip row groups inside big files. With
         ``files_per_bucket`` > 1 each bucket is additionally split into
         that many TIME-RANGED files (ntile over warc_ts within the
         bucket), giving the manifest's file-level zone maps
         (``ts_range``) disjoint ranges to prune on — a time-window read
         after compaction touches ~1/files_per_bucket of each bucket's
-        data instead of all of it. The split is routed exactly (one sort
-        partition per bucket×slice via the inverse-murmur3 slot keys),
-        never hash balls-in-bins, so every output file covers exactly
-        one bucket and one contiguous time range."""
-        base_v = self.current_version()
-        df = self.read(include_tombstones=True)
-        if not cluster_by_ts or "warc_ts" not in df.columns:
-            entries = self.write_data(df, base_v + 1)
-            return self.commit(files=entries,
-                               summary={"operation": "compact"},
-                               expected_base=base_v)
-        from pyspark.sql import Window
-
-        from tinyetl_spark.lake.merge import _slotkey_column
+        data instead of all of it. Every output file covers exactly one
+        bucket and, clustered, one contiguous time range."""
         snap = self.snapshot()
-        nb, k = snap.num_buckets, max(int(files_per_bucket), 1)
-        out_dir = self.new_data_dir(base_v + 1)
-        df = df.withColumn("_bucket", self.bucket_expr())
-        if k > 1:
-            w = Window.partitionBy("_bucket").orderBy("warc_ts")
-            df = df.withColumn("_slice", F.ntile(k).over(w) - 1)
-        else:
-            df = df.withColumn("_slice", F.lit(0))
-        # composite (bucket, slice) id routed exactly: one sort
-        # partition per output file, so each file's zone map is one
-        # bucket × one contiguous time range
-        cid = (F.col("_bucket") * k + F.col("_slice")).alias("_cid")
-        slots = nb * k
-        assign = {c: c % slots for c in range(slots)}
-        (df.withColumn("_realb", F.col("_bucket"))
-           .withColumn("_bucket", cid)
-           .withColumn("_slotkey", _slotkey_column(slots, slots, assign))
-           .withColumn("_bucket", F.col("_realb"))
-           .repartition(slots, "_slotkey")
-           .sortWithinPartitions("warc_ts")
-           .drop("_slotkey", "_realb", "_slice")
-           .write.mode("append").parquet(out_dir))
-        entries, _ = self.readback_entries(out_dir)
-        total = sum(int(e.get("rows") or 0) for e in entries)
-        return self.commit(
-            files=entries,
-            summary={"operation": "compact", "clustered_by": "warc_ts",
-                     "files_per_bucket": k,
-                     "active_buckets": snap.summary.get(
-                         "active_buckets", 0),
-                     "total_rows": total},
-            expected_base=base_v)
+        df = self.read(version=snap.version, include_tombstones=True)
+        cluster = cluster_by_ts and "warc_ts" in df.columns
+        entries = self._rewrite(df, snap, snap.version + 1,
+                                cluster_by_ts=cluster,
+                                files_per_bucket=files_per_bucket)
+        summary: dict[str, Any] = {"operation": "compact"}
+        if cluster:
+            summary.update(clustered_by="warc_ts",
+                           files_per_bucket=max(int(files_per_bucket), 1))
+        return self._commit_rewrite(snap, [], entries, summary)
 
     def rescale_buckets(self, new_num_buckets: int) -> Snapshot:
         """Bucket-count evolution (Iceberg partition-spec evolution +
@@ -726,30 +845,22 @@ class LakeTable:
         through, so exactly-once replay protection survives the
         rescale; lineage resets (it is per-spec by construction) and the
         skew detector re-learns from the next commit's lineage."""
-        base_v = self.current_version()
-        snap = self.snapshot(base_v)
+        snap = self.snapshot()
         new_n = int(new_num_buckets)
         if new_n < 1:
             raise ValueError(f"num_buckets must be >= 1, got {new_n}")
         if new_n == snap.num_buckets:
             return snap
-        df = self.read(include_tombstones=True)
-        out_dir = self.new_data_dir(base_v + 1)
-        new_bucket = F.pmod(F.xxhash64(F.col(snap.key_col)), F.lit(new_n))
-        slots = min(new_n, max(
-            2 * self.spark.sparkContext.defaultParallelism, 8))
-        self.write_files(df.withColumn("_bucket", new_bucket), out_dir,
-                         slots, num_buckets=new_n)
-        entries, _ = self.readback_entries(out_dir)
-        total = sum(int(e.get("rows") or 0) for e in entries)
-        active = len({b for e in entries for b in e["buckets"]})
-        return self.commit(
-            files=entries,
-            summary={"operation": "rescale",
-                     "from_buckets": snap.num_buckets,
-                     "to_buckets": new_n,
-                     "active_buckets": active, "total_rows": total},
-            expected_base=base_v, num_buckets=new_n)
+        entries = self._rewrite(
+            self.read(version=snap.version, include_tombstones=True),
+            snap, snap.version + 1, num_buckets=new_n)
+        return self._commit_rewrite(
+            snap, [], entries,
+            {"operation": "rescale", "from_buckets": snap.num_buckets,
+             "to_buckets": new_n,
+             "active_buckets": len({b for e in entries
+                                    for b in e["buckets"]})},
+            num_buckets=new_n)
 
     def compact_deltas(self) -> Snapshot:
         """Absorb merge-on-read delta debt by rewriting ONLY the
@@ -758,41 +869,21 @@ class LakeTable:
         O(table) — at 100 TB the routine maintenance pass a uniform CDC
         stream needs, where ``compact()``'s full rewrite is a rare
         binpack. Clean base files carry over untouched; the rewritten
-        buckets come back one-file-per-bucket (exact routing), LWW
-        resolved, tombstones preserved; epoch-fence properties carry
-        through the commit so replay protection survives maintenance."""
+        buckets come back one file per bucket, LWW resolved, tombstones
+        preserved."""
         snap = self.snapshot()
         delta_files = [f for f in snap.files if f.get("delta")]
         if not delta_files:
             return snap
-        rewrite: set[int] = set()
-        for f in delta_files:
-            rewrite |= set(f["buckets"])
-        while True:  # closure over base files co-locating other buckets
-            grown = set(rewrite)
-            for f in snap.files:
-                bs = set(f["buckets"])
-                if bs & grown:
-                    grown |= bs
-            if grown == rewrite:
-                break
-            rewrite = grown
+        rewrite = bucket_closure(
+            snap.files, {b for f in delta_files for b in f["buckets"]})
         carried = [f for f in snap.files
                    if not (set(f["buckets"]) & rewrite)]
-        df = self.read(buckets=rewrite, include_tombstones=True)
-        out_dir = self.new_data_dir(snap.version + 1)
-        self.write_files(df.withColumn("_bucket", self.bucket_expr()),
-                         out_dir, max(len(rewrite), 1), buckets=rewrite)
-        entries, _ = self.readback_entries(out_dir)
-        total = (sum(int(f.get("rows") or 0) for f in carried)
-                 + sum(int(e.get("rows") or 0) for e in entries))
-        # carry the steady-state signals (active_buckets, total_rows) so
-        # an out-of-band maintenance pass doesn't knock the next merge's
-        # auto strategy back to the sparse probe path
-        return self.commit(
-            files=carried + entries,
-            summary={"operation": "compact_deltas",
-                     "rewritten_buckets": len(rewrite),
-                     "active_buckets": snap.summary.get("active_buckets", 0),
-                     "total_rows": total},
-            expected_base=snap.version)
+        entries = self._rewrite(
+            self.read(version=snap.version, buckets=rewrite,
+                      include_tombstones=True),
+            snap, snap.version + 1, buckets=rewrite)
+        return self._commit_rewrite(
+            snap, carried, entries,
+            {"operation": "compact_deltas",
+             "rewritten_buckets": len(rewrite)})

@@ -162,9 +162,6 @@ def main() -> None:
         sys.exit(f"submit failed rc={p.returncode}")
     res = json.loads(lines[-1])
     res["tree_cpu_seconds"] = round(cpu, 1)
-    for ln in p.stdout.splitlines():
-        if "[merge-timing]" in ln:
-            print(ln)
     print(json.dumps(res))
     summarize(evlog)
     if not args.keep:

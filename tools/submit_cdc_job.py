@@ -15,7 +15,8 @@ it off the distributed archive.
         tools/submit_cdc_job.py --gen-events 400000 --work /tmp/w
 
 Prints ONE JSON line: events applied, wall seconds, events/sec,
-final table rows, micro-batches, executor count, default parallelism.
+final table rows, micro-batches, each batch's merge segment profile,
+executor count, default parallelism.
 With --log the job replays a pre-generated log (the bench protocol's
 deterministic one) instead of generating its own.
 
@@ -216,6 +217,7 @@ def main() -> None:
         "events_per_sec_wall": round(total / elapsed, 1) if elapsed else None,
         "final_rows": final_rows,
         "batches": len(stats),
+        "merge_profiles": [s.profile for s in stats],
         "executors": _executor_count(spark),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
