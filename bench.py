@@ -564,7 +564,6 @@ def _cdc_round(spark, cores: int, log_dir: str) -> dict:
         t0 = time.time()
         c0 = _tree_cpu_sample()
         run = run_pipeline(spark, log_dir, f"{work}/table", f"{work}/ckpt",
-                           trigger_available_now=True,
                            max_files_per_trigger=64,
                            query_name=f"cdc-bench-{cores}")
         run.await_termination()
@@ -573,19 +572,15 @@ def _cdc_round(spark, cores: int, log_dir: str) -> dict:
         cpu = _tree_cpu_delta(c0, _tree_cpu_sample())
         total = sum(s.events_in for s in stats)
         # SUSTAINED throughput (the north metric's own word): events over
-        # the sum of per-batch triggerExecution — every batch's full cost
-        # (incremental planning, dedup+extract+MERGE job, offset/commit
-        # bookkeeping) counts, while the one-time query init/teardown of
+        # the run's busy time (PipelineRun.busy_seconds) — every batch's
+        # full cost counts, while the one-time query init/teardown of
         # THIS replay harness does not. A production stream pays startup
         # once per deploy, not per batch; wall-clock over the whole
         # replay is also recorded (events_per_sec_wall) and the fixed
         # ~2-4 s startup is visible as their difference. Applied
         # symmetrically at both levels; a 10^8-event production batch
         # amortizes the serial floor far further than this 8M-event one.
-        busy_ms = sum(p.durationMs.get("triggerExecution", 0)
-                      for p in run.query.recentProgress
-                      if (p.numInputRows or 0) > 0)
-        busy_s = busy_ms / 1000.0 if busy_ms else elapsed
+        busy_s = run.busy_seconds() or elapsed
         final_rows = LakeTable(spark, f"{work}/table").read().count()
         return {
             "cores": cores, "events": total, "seconds": round(elapsed, 2),

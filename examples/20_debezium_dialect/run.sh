@@ -15,7 +15,7 @@ from tinyetl_spark.lake.merge import merge_apply
 from tinyetl_spark.schema import PAGES_SCHEMA
 from tinyetl_spark.sources.debezium import (parse_debezium,
                                             publish_changes,
-                                            stream_debezium, to_debezium)
+                                            stream_envelopes, to_debezium)
 from tinyetl_spark.session import get_spark
 
 spark = get_spark(cores=4)
@@ -28,7 +28,7 @@ to_debezium(ev).repartition(4).write.mode("overwrite").text("landing")
 # inbound: envelope tail -> fenced MERGE
 src = LakeTable.create(spark, "lake/src", PAGES_SCHEMA,
                        key_col="url", num_buckets=8)
-(stream_debezium(spark, "landing")
+(stream_envelopes(spark, "landing", "debezium")
  .writeStream
  .foreachBatch(lambda b, i: merge_apply(src, b, i, stream_id="in"))
  .option("checkpointLocation", "ck_in")

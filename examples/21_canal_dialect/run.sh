@@ -18,7 +18,7 @@ from tinyetl_spark.lake import LakeTable
 from tinyetl_spark.lake.merge import merge_apply
 from tinyetl_spark.schema import PAGES_SCHEMA
 from tinyetl_spark.sources.debezium import (parse_canal, publish_changes,
-                                            stream_canal, to_canal)
+                                            stream_envelopes, to_canal)
 from tinyetl_spark.session import get_spark
 
 spark = get_spark(cores=4)
@@ -37,7 +37,7 @@ spark.createDataFrame([(ddl,)], "value string") \
 # inbound: batched-envelope tail -> fenced MERGE
 src = LakeTable.create(spark, "lake/src", PAGES_SCHEMA,
                        key_col="url", num_buckets=8)
-(stream_canal(spark, "landing")
+(stream_envelopes(spark, "landing", "canal")
  .writeStream
  .foreachBatch(lambda b, i: merge_apply(src, b, i, stream_id="in"))
  .option("checkpointLocation", "ck_in")

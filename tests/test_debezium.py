@@ -11,8 +11,8 @@ import pytest
 from tinyetl_spark.lake import LakeTable
 from tinyetl_spark.schema import EVENTS_SCHEMA, PAGES_SCHEMA
 from tinyetl_spark.lake.merge import merge_apply
-from tinyetl_spark.sources.debezium import (parse_debezium, stream_debezium,
-                                            to_debezium)
+from tinyetl_spark.sources.debezium import (DIALECTS, parse_debezium,
+                                            stream_envelopes, to_debezium)
 
 UTC = datetime.timezone.utc
 
@@ -97,7 +97,7 @@ def test_tombstones_truncates_and_lsn_fallback(spark):
 
 
 def test_stream_landing_zone_to_merge(spark, tmpdir_path):
-    """json-lines landing zone → stream_debezium → fenced MERGE: final
+    """json-lines landing zone → stream_envelopes → fenced MERGE: final
     state equals a direct batch merge of the same events (the adapter
     changes the wire format, not the state machine)."""
     ev = _events(spark)
@@ -106,7 +106,7 @@ def test_stream_landing_zone_to_merge(spark, tmpdir_path):
 
     table = LakeTable.create(spark, f"{tmpdir_path}/t", PAGES_SCHEMA,
                              key_col="url", num_buckets=4)
-    stream = stream_debezium(spark, f"{tmpdir_path}/dbz")
+    stream = stream_envelopes(spark, f"{tmpdir_path}/dbz", "debezium")
     assert stream.isStreaming
 
     def apply_batch(batch, batch_id):
@@ -256,40 +256,6 @@ def test_maxwell_roundtrip_and_bootstrap(spark):
                                                500000)
 
 
-def test_cli_stream_debezium_source(spark, tmpdir_path, capsys):
-    """YAML job with options.source_format: debezium — the CLI runs the
-    full pipeline off a Debezium landing zone and resumes exactly-once
-    from the same checkpoint."""
-    from tinyetl_spark.cli import main
-
-    ev = _events(spark)
-    (to_debezium(ev).coalesce(1)
-     .write.mode("overwrite").text(f"{tmpdir_path}/landing"))
-    job = f"{tmpdir_path}/job.yaml"
-    with open(job, "w") as f:
-        f.write(f"""\
-version: 1
-source:
-  uri: {tmpdir_path}/landing
-target:
-  uri: {tmpdir_path}/lake/pages
-options:
-  mode: stream
-  source_format: debezium
-  checkpoint_dir: {tmpdir_path}/ck
-  key_col: url
-  num_buckets: 4
-""")
-    assert main(["run", job]) == 0
-    assert "applied 4 events" in capsys.readouterr().out
-    t = LakeTable(spark, f"{tmpdir_path}/lake/pages")
-    assert sorted((r.url, r.event_seq) for r in t.read().collect()) == \
-        [("https://a.example/2", 2)]
-    # exactly-once: re-run from the same checkpoint applies nothing
-    assert main(["run", job]) == 0
-    assert "applied 0 events" in capsys.readouterr().out
-
-
 def test_roundtrip_property_adversarial_strings(spark):
     """Property check (hypothesis): BOTH dialects are the identity on
     change events whose url/lang carry JSON-hostile text (quotes,
@@ -331,7 +297,7 @@ def test_roundtrip_property_adversarial_strings(spark):
 
 def test_publish_streaming_consumer_chain(spark, tmpdir_path):
     """The docstring's exactly-once consumer claim, exercised for real:
-    a STREAMING consumer (stream_debezium with its own checkpoint) over
+    a STREAMING consumer (stream_envelopes with its own checkpoint) over
     a publish_changes output dir respects the file-sink manifest —
     each change consumed exactly once across two publish/consume
     cycles, mirror converges. Also covers the maxwell publish dialect
@@ -350,7 +316,7 @@ def test_publish_streaming_consumer_chain(spark, tmpdir_path):
                               key_col="url", num_buckets=4)
 
     def consume():
-        (stream_debezium(spark, out).writeStream
+        (stream_envelopes(spark, out, "debezium").writeStream
          .foreachBatch(lambda b, i: merge_apply(
              mirror, b, i, stream_id="c"))
          .option("checkpointLocation", f"{tmpdir_path}/con_ck")
@@ -495,11 +461,11 @@ def test_canal_garbage_vs_protocol_quarantine_mode(spark):
 
 def test_schema_evolution_over_the_wire(spark, tmpdir_path):
     """An upgraded agent starts emitting a new image field: parsing
-    with an extended image schema projects it through verbatim, the
-    fenced MERGE widens the table, and pre-evolution rows conform to
-    null — the north rule's add-column evolution driven entirely from
-    the wire format. Covers the Debezium leg end-to-end and the Canal
-    leg's extra-field roundtrip."""
+    with an extended image schema projects it through verbatim; once the
+    table is evolved to carry the column (the merge conforms to the
+    current schema and would drop it otherwise), the fenced MERGE stores
+    it and pre-evolution rows conform to null. Covers the Debezium leg
+    end-to-end and the Canal leg's extra-field roundtrip."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from tinyetl_spark.sources.debezium import (CANAL_IMAGE_SCHEMA,
@@ -619,15 +585,15 @@ def test_canal_batched_property_vs_reference(spark):
     check()
 
 
-def test_cli_stream_canal_source(spark, tmpdir_path, capsys):
-    """YAML job with options.source_format: canal — the pipeline runs
-    off a Canal flatMessage landing zone with the same exactly-once
-    resume semantics as the other dialects."""
+@pytest.mark.parametrize("dialect", sorted(DIALECTS))
+def test_cli_stream_envelope_source(spark, tmpdir_path, capsys, dialect):
+    """YAML job with options.source_format: <dialect> — the CLI runs the
+    full pipeline off that dialect's landing zone and resumes
+    exactly-once from the same checkpoint."""
     from tinyetl_spark.cli import main
-    from tinyetl_spark.sources.debezium import to_canal
 
-    ev = _events(spark)
-    (to_canal(ev).coalesce(1)
+    _, to_fn = DIALECTS[dialect]
+    (to_fn(_events(spark)).coalesce(1)
      .write.mode("overwrite").text(f"{tmpdir_path}/landing"))
     job = f"{tmpdir_path}/job.yaml"
     with open(job, "w") as f:
@@ -639,7 +605,7 @@ target:
   uri: {tmpdir_path}/lake/pages
 options:
   mode: stream
-  source_format: canal
+  source_format: {dialect}
   checkpoint_dir: {tmpdir_path}/ck
   key_col: url
   num_buckets: 4
@@ -647,10 +613,11 @@ options:
     assert main(["run", job]) == 0
     assert "applied 4 events" in capsys.readouterr().out
     t = LakeTable(spark, f"{tmpdir_path}/lake/pages")
-    # LWW over the embedded keys reconverges to the same final state:
-    # url 1 deleted (seq 3*4096 wins), url 2 alive
+    # url 1 deleted (seq 3 wins), url 2 alive; canal embeds the ordering
+    # key as seq * 4096, which LWW reconverges over all the same
+    seq_scale = 4096 if dialect == "canal" else 1
     assert sorted((r.url, r.event_seq) for r in t.read().collect()) == \
-        [("https://a.example/2", 2 * 4096)]
+        [("https://a.example/2", 2 * seq_scale)]
     # exactly-once: re-run from the same checkpoint applies nothing
     assert main(["run", job]) == 0
     assert "applied 0 events" in capsys.readouterr().out

@@ -2,6 +2,7 @@
 idempotency, epoch fencing, tombstones vs late data, datagen determinism."""
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 
 from tinyetl_spark import datagen
@@ -323,6 +324,30 @@ def test_merge_profile_always_recorded(spark, tmpdir_path):
         k: v for k, v in s.profile.items() if k != "commit"}
     replay = merge_apply(t, ev, 0)
     assert replay.fenced and list(replay.profile) == ["snapshot"]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_reads_version_pointer_twice(spark, tmpdir_path, monkeypatch,
+                                           mode):
+    """A merge plans against ONE snapshot: the table's VERSION pointer is
+    read once to plan (fence, strategy, bucket transform, base read) and
+    once in the commit's validated swap — for copy-on-write and
+    merge-on-read alike."""
+    t = make_table(spark, f"{tmpdir_path}/t")
+    ev = datagen.change_events(spark, 1500, 200, seed=11)
+    merge_apply(t, ev.filter("event_seq < 750"), 0)
+    reads = []
+    current_version = LakeTable.current_version
+
+    def counted(self):
+        reads.append(self.root)
+        return current_version(self)
+    monkeypatch.setattr(LakeTable, "current_version", counted)
+    s = merge_apply(t, ev.filter("event_seq >= 750"), 1, mode=mode)
+    assert s.strategy == mode and not s.fenced and s.events_in == 750
+    assert len(reads) == 2
+    monkeypatch.undo()
+    assert_state_equal(t, ev)
 
 
 def _job_ids(spark):

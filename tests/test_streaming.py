@@ -4,12 +4,14 @@ full-replay reconvergence, in-stream watermark dedup."""
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from tinyetl_spark import datagen
 from tinyetl_spark.lake import LakeTable
 from tinyetl_spark.schema import PAGES_SCHEMA
 from tinyetl_spark.sources.eventlog import append_events, read_event_log
-from tinyetl_spark.streaming.pipeline import run_to_completion
+from tinyetl_spark.streaming.pipeline import (run_pipeline,
+                                              run_to_completion)
 from tests.test_merge import brute_force_state
 
 
@@ -66,6 +68,48 @@ def test_full_replay_fresh_checkpoint_reconverges(spark, tmpdir_path):
     assert sum(s.events_in for s in stats) == 1200     # fully replayed
     assert not any(s.fenced for s in stats)            # new incarnation
     assert state(spark, table) == before
+
+
+def test_processing_time_trigger_drains_log(spark, tmpdir_path):
+    """A standing processingTime trigger (instead of availableNow) merges
+    a 2-segment log to the same state as the drained run."""
+    log, table, ckpt, ev = setup(spark, tmpdir_path)
+    append_events(ev, log, segment_partitions=2)
+    run = run_pipeline(spark, log, table, ckpt, processing_time="1 second")
+    try:
+        run.query.processAllAvailable()
+    finally:
+        run.query.stop()
+    assert sum(s.events_in for s in run.stats) == 1200
+    assert state(spark, table) == oracle_state(ev)
+
+
+def test_busy_seconds_refuses_truncated_progress(spark, tmpdir_path):
+    """busy_seconds sums triggerExecution over the batches that read
+    input; when Spark's progress retention has dropped a batch the run
+    applied, it raises instead of undercounting."""
+    log, table, ckpt, ev = setup(spark, tmpdir_path, n_events=300, n_urls=40)
+    append_events(ev, log, segment_partitions=3)
+    run = run_pipeline(spark, log, table, ckpt, max_files_per_trigger=1)
+    run.await_termination()
+    assert [s.batch_id for s in run.stats] == [0, 1, 2]
+    assert run.busy_seconds() == sum(
+        p.durationMs["triggerExecution"] for p in run.query.recentProgress
+        if p.numInputRows > 0) / 1000.0 > 0
+
+    retention = "spark.sql.streaming.numRecentProgressUpdates"
+    LakeTable.create(spark, f"{tmpdir_path}/t2", PAGES_SCHEMA,
+                     key_col="url", num_buckets=8)
+    spark.conf.set(retention, "1")
+    try:
+        short = run_pipeline(spark, log, f"{tmpdir_path}/t2",
+                             f"{tmpdir_path}/ck2", max_files_per_trigger=1)
+        short.await_termination()
+    finally:
+        spark.conf.unset(retention)
+    assert len(short.stats) == 3
+    with pytest.raises(RuntimeError, match="undercount"):
+        short.busy_seconds()
 
 
 def test_interrupted_run_resumes_exactly_once(spark, tmpdir_path):

@@ -93,8 +93,8 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from tinyetl_spark.lake.table import (LakeTable, bucket_closure, conform,
-                                     slotkey_column)
+from tinyetl_spark.lake.table import (LakeTable, bucket_closure,
+                                     bucket_column, conform, slotkey_column)
 
 
 @dataclass
@@ -240,13 +240,17 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
         profile[label] = round(now - t_last[0], 3)
         t_last[0] = now
 
+    # ONE snapshot read plans the whole merge (fence, strategy, bucket
+    # transform, base read); the commit's validated swap is the only other
+    # read of the version pointer
     snap = table.snapshot()
     key = snap.key_col
     num_b = snap.num_buckets
+    bucket = bucket_column(key, num_b)
     mark("snapshot")
 
     # ---- epoch fence: skip replayed batches that already committed
-    if batch_id <= last_committed_batch(table, stream_id):
+    if batch_id <= int(snap.properties.get(FENCE_PREFIX + stream_id, -1)):
         return MergeStats(batch_id, 0, 0, 0, 0, 0, num_b, 0.0,
                           fenced=True, snapshot_version=snap.version,
                           profile=profile)
@@ -308,7 +312,7 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
             mark("commit")
             return stats
     else:
-        pre = (batch.groupBy(table.bucket_expr().alias("b")).count().collect())
+        pre = batch.groupBy(bucket.alias("b")).count().collect()
         events_in = sum(int(r["count"]) for r in pre)
         touched = {int(r["b"]) for r in pre}
         mark("job1_probe")
@@ -343,8 +347,8 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     if use_mor:
         unioned_src = b
     else:
-        cur = (table.read(buckets=touched, include_tombstones=True,
-                          resolve=False)
+        cur = (table.read(version=snap.version, buckets=touched,
+                          include_tombstones=True, resolve=False)
                     .withColumn("_src", F.lit(0)))
         unioned_src = cur.unionByName(b)
     # one write slot per touched bucket: file layout (and therefore all
@@ -393,7 +397,7 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     obs = Observation()
     # events_in rides the scan as an observed metric — no counting job.
     unioned = (unioned_src
-               .withColumn("_bucket", table.bucket_expr())
+               .withColumn("_bucket", bucket)
                .withColumn("_slotkey", slotkey_column(num_b, slots,
                                                       bucket_slot,
                                                       splits, key))

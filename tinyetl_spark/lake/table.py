@@ -210,6 +210,14 @@ def slotkey_column(num_ids: int, slots: int, id_slot: dict[int, int],
     return col
 
 
+def bucket_column(key, num_buckets: int):
+    """The partition transform, ``pmod(xxhash64(key), num_buckets)`` —
+    the one definition every writer, pruner and reader routes by.
+    ``key`` is a column name or a Column."""
+    c = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(c), F.lit(num_buckets))
+
+
 def bucket_closure(files: list[dict[str, Any]], buckets: set[int]) -> set[int]:
     """``buckets`` grown until no manifest file straddles its edge: a data
     file may hold more than one bucket, so rewriting bucket 5 out of a
@@ -363,11 +371,11 @@ class LakeTable:
 
     # ---------------------------------------------------------------- reads
     def bucket_expr(self, col=None, num_buckets: int | None = None):
-        """The partition transform: pmod(xxhash64(key), N) — consistent
-        everywhere (writer, pruner, reader)."""
+        """``bucket_column`` over the current snapshot's key (or ``col``)
+        and bucket count (or ``num_buckets``)."""
         snap = self.snapshot()
-        c = F.col(snap.key_col) if col is None else col
-        return F.pmod(F.xxhash64(c), F.lit(num_buckets or snap.num_buckets))
+        return bucket_column(snap.key_col if col is None else col,
+                             num_buckets or snap.num_buckets)
 
     def lookup(self, key, version: int | None = None) -> DataFrame:
         """Point read of one key: the key's bucket is computed DRIVER-
@@ -716,8 +724,7 @@ class LakeTable:
         # composite (bucket b, slice j) id b*k+j -> slot rank(b)*k+j
         cid_slot = {b * k + j: r * k + j
                     for r, b in enumerate(order) for j in range(k)}
-        routed = (df.withColumn("_bucket", F.pmod(F.xxhash64(
-                        F.col(snap.key_col)), F.lit(nb)))
+        routed = (df.withColumn("_bucket", bucket_column(snap.key_col, nb))
                     .withColumn("_cid", cid)
                     .withColumn("_slotkey", slotkey_column(
                         nb * k, slots, cid_slot, id_col="_cid"))

@@ -68,8 +68,9 @@ _SOURCE_SCHEMA = StructType([
 # the event-shape columns every dialect maps explicitly; any OTHER field
 # in a caller-supplied image schema is schema evolution arriving over
 # the wire (an upgraded agent emitting a new column) and is projected
-# through verbatim so the merge's union-by-name evolution can widen the
-# table from the stream itself
+# through verbatim. The merge does not widen the table: it conforms each
+# batch to the table's current schema and drops columns the table lacks,
+# so evolve the table first (LakeTable.evolve_schema) to keep them
 _STD_IMAGE_FIELDS = ("url", "warc_ts", "html", "lang")
 
 
@@ -448,13 +449,31 @@ def to_canal(events: DataFrame, database: str = "crawl",
     return events.select(F.to_json(env).alias("value"))
 
 
+# envelope dialect -> (parse_fn, to_fn): the inbound parser (envelope
+# strings in column ``value`` -> change events) and its outbound inverse
+DIALECTS = {
+    "debezium": (parse_debezium, to_debezium),
+    "maxwell": (parse_maxwell, to_maxwell),
+    "canal": (parse_canal, to_canal),
+}
+
+
+def dialect_codec(name: str):
+    """``(parse_fn, to_fn)`` of the envelope dialect ``name``."""
+    try:
+        return DIALECTS[name]
+    except KeyError:
+        raise ValueError(f"unknown dialect: {name!r} "
+                         f"({' | '.join(DIALECTS)})") from None
+
+
 def publish_changes(spark: SparkSession, src_table: str, out_dir: str,
-                    checkpoint_dir: str, wrapped: bool = True,
-                    dialect: str = "debezium") -> None:
-    """Publish a lake table's change-data-feed as Debezium envelopes —
-    the outbound half of the dialect: this engine as the CDC *producer*
-    a downstream Debezium-speaking consumer (another instance of this
-    engine included) can tail.
+                    checkpoint_dir: str, dialect: str = "debezium") -> None:
+    """Publish a lake table's change-data-feed as envelopes of
+    ``dialect`` (Debezium by default) — the outbound half of the
+    dialect: this engine as the CDC *producer* a downstream consumer
+    speaking that dialect (another instance of this engine included)
+    can tail.
 
     Wiring: the ``tinyetl_cdf`` streaming source tails the table's
     commits with checkpointed snapshot-version offsets; change rows map
@@ -464,85 +483,39 @@ def publish_changes(spark: SparkSession, src_table: str, out_dir: str,
     json-lines segments through Spark's file sink, whose _spark_metadata
     manifest commits files atomically per batch — a crashed invocation
     re-emits its uncommitted batch, and any manifest-respecting reader
-    (spark.read/readStream.text — stream_debezium included) sees each
+    (Spark's batch or streaming text source — stream_envelopes
+    included) sees each
     change exactly once. The image carries the EVENT columns (url,
     warc_ts, html, lang); derived text is the consumer's to re-extract,
     same as the inbound path.
 
-    End-to-end: publish_changes → stream_debezium → merge_apply is a
+    End-to-end: publish_changes → stream_envelopes → merge_apply is a
     mirror over the wire dialect — reconverges to the source state by
     the same LWW idempotency as replicate() (which chains the engines
     directly, without the serialization)."""
-    from tinyetl_spark.streaming.cdf_source import register_cdf_source
-    register_cdf_source(spark)
-    feed = (spark.readStream.format("tinyetl_cdf")
-            .option("path", src_table).load())
-    events = feed.select(
-        F.col("event_seq"), F.col("url"), F.col("warc_ts"),
-        F.when(F.col("_change_type") == "delete", F.lit("delete"))
-         .otherwise(F.lit("update")).alias("op"),
-        F.col("html"), F.col("lang"))
-    if dialect == "debezium":
-        env = to_debezium(events, wrapped=wrapped)
-    elif dialect == "maxwell":
-        env = to_maxwell(events)
-    elif dialect == "canal":
-        env = to_canal(events)
-    else:
-        raise ValueError(f"unknown dialect: {dialect!r} "
-                         "(debezium | maxwell | canal)")
-    (env.writeStream.format("text").option("path", out_dir)
+    from tinyetl_spark.streaming.cdf_source import stream_change_events
+    _, to_fn = dialect_codec(dialect)
+    events = stream_change_events(spark, src_table).select(
+        "event_seq", "url", "warc_ts", "op", "html", "lang")
+    (to_fn(events).writeStream.format("text").option("path", out_dir)
      .option("checkpointLocation", checkpoint_dir)
      .trigger(availableNow=True).start().awaitTermination())
 
 
-def stream_debezium(spark: SparkSession, dir_path: str,
-                    image_schema: StructType = PAGE_IMAGE_SCHEMA,
-                    wrapped: bool = True,
-                    max_files_per_trigger: int | None = None,
-                    drop_invalid: bool = True,
-                    raw_col: str | None = None) -> DataFrame:
-    """Streaming tail of a json-lines Debezium landing zone with
-    checkpointed file-source offsets — drop-in for
+def stream_envelopes(spark: SparkSession, dir_path: str, dialect: str,
+                     max_files_per_trigger: int | None = None,
+                     drop_invalid: bool = True,
+                     raw_col: str | None = None) -> DataFrame:
+    """Streaming tail of a json-lines landing zone of ``dialect``
+    envelopes with checkpointed file-source offsets — drop-in for
     eventlog.stream_event_log when the agent ships envelopes instead of
     parquet. Same offsets/replay semantics (the file source checkpoints
     which segments belong to each batch). ``drop_invalid=False`` +
     ``raw_col`` feed garbage envelopes to the pipeline's quarantine
     instead of dropping them (see parse_debezium)."""
+    parse_fn, _ = dialect_codec(dialect)
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.text(dir_path)
-    return parse_debezium(raw, "value", image_schema, wrapped,
-                          drop_invalid=drop_invalid, raw_col=raw_col)
-
-
-def stream_maxwell(spark: SparkSession, dir_path: str,
-                   image_schema: StructType = MAXWELL_IMAGE_SCHEMA,
-                   max_files_per_trigger: int | None = None,
-                   drop_invalid: bool = True,
-                   raw_col: str | None = None) -> DataFrame:
-    """Streaming tail of a Maxwell json-lines landing zone — same
-    checkpointed file-source offsets and DLQ contract as
-    stream_debezium."""
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return parse_maxwell(reader.text(dir_path), "value", image_schema,
-                         drop_invalid=drop_invalid, raw_col=raw_col)
-
-
-def stream_canal(spark: SparkSession, dir_path: str,
-                 image_schema: StructType = CANAL_IMAGE_SCHEMA,
-                 max_files_per_trigger: int | None = None,
-                 drop_invalid: bool = True,
-                 raw_col: str | None = None) -> DataFrame:
-    """Streaming tail of a Canal flatMessage landing zone — same
-    checkpointed file-source offsets; ``drop_invalid=False`` +
-    ``raw_col`` route garbage envelopes to the quarantine DLQ exactly
-    like the Debezium path."""
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return parse_canal(reader.text(dir_path), "value", image_schema,
-                       drop_invalid=drop_invalid, raw_col=raw_col)
+    return parse_fn(reader.text(dir_path), "value",
+                    drop_invalid=drop_invalid, raw_col=raw_col)

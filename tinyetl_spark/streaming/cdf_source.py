@@ -29,6 +29,7 @@ import json
 import os
 from typing import Any
 
+import pyspark.sql.functions as F
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import (LongType, StringType, StructField,
@@ -163,3 +164,19 @@ class CdfDataSource(DataSource):
 def register_cdf_source(spark) -> None:
     """Idempotently register the format with this session."""
     spark.dataSource.register(CdfDataSource)
+
+
+def stream_change_events(spark, table_path: str):
+    """Tail ``table_path``'s change feed as change events: the table's
+    columns plus ``op`` (a ``delete`` change → delete, every other change
+    → update — a feed cannot tell a create from an update and LWW apply
+    does not need to), without the feed's bookkeeping columns. The shape
+    ``replicate`` merges and ``publish_changes`` serialises."""
+    register_cdf_source(spark)
+    feed = (spark.readStream.format(FORMAT_NAME)
+            .option("path", table_path).load())
+    return (feed.withColumn("op", F.when(F.col("_change_type") == "delete",
+                                         F.lit("delete"))
+                                   .otherwise(F.lit("update")))
+            .drop("_change_type", "_commit_version", "_batch_id",
+                  "_deleted"))

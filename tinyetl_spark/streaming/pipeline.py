@@ -5,9 +5,13 @@ Wiring::
     stream_event_log(...)                    # checkpointed offsets
       [.withWatermark("warc_ts", ...)        # optional in-stream guard
        .dropDuplicatesWithinWatermark(...)]
-      .writeStream.foreachBatch(merge batch) # idempotent, epoch-fenced
-      .option("checkpointLocation", ...)
-      .trigger(availableNow=True | processingTime=...)
+      → _start_stream(events, apply_batch, ...)  # per-batch sink,
+                                                 # checkpointLocation,
+                                                 # availableNow | processingTime
+
+``run_pipeline``, ``replicate`` and ``run_fanout_pipeline`` differ only
+in their source and their per-batch ``apply_batch`` (an idempotent,
+epoch-fenced merge); all three start through ``_start_stream``.
 
 Exactly-once story (north rule):
 - offsets: the file source checkpoint pins which log segments belong to
@@ -36,7 +40,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from tinyetl_spark.lake import LakeTable, merge_apply
@@ -60,14 +64,53 @@ def _stream_incarnation(checkpoint_dir: str) -> str:
     return sid
 
 
+# ``auto_rescale_rows_per_bucket`` doubles the bucket count up to this cap
+AUTO_RESCALE_MAX_BUCKETS = 1 << 16
+
+
 @dataclass
 class PipelineRun:
-    query: StreamingQuery
+    query: StreamingQuery | None
     stream_id: str
     stats: list[MergeStats] = field(default_factory=list)
 
     def await_termination(self, timeout: int | None = None):
         return self.query.awaitTermination(timeout)
+
+    def busy_seconds(self) -> float:
+        """Sustained busy time: the sum of ``triggerExecution`` over the
+        batches that read input — every batch's full cost (planning, the
+        merge job, offset/commit bookkeeping) without the query's one-time
+        start and stop. Spark keeps only the last
+        ``spark.sql.streaming.numRecentProgressUpdates`` progress updates;
+        if a batch this run applied is no longer among them the sum would
+        undercount, so this raises instead."""
+        progress = self.query.recentProgress
+        runs = (self.stats.values() if isinstance(self.stats, dict)
+                else [self.stats])
+        missing = ({s.batch_id for stats in runs for s in stats}
+                   - {p.batchId for p in progress})
+        if missing:
+            raise RuntimeError(
+                f"streaming progress of batches {sorted(missing)} is no "
+                "longer retained (spark.sql.streaming."
+                "numRecentProgressUpdates); busy time would undercount")
+        return sum(p.durationMs.get("triggerExecution", 0)
+                   for p in progress if (p.numInputRows or 0) > 0) / 1000.0
+
+
+def _start_stream(events: DataFrame, apply_batch, checkpoint_dir: str,
+                  query_name: str, processing_time: str | None = None
+                  ) -> StreamingQuery:
+    """THE stream launcher: ``apply_batch`` per micro-batch, offsets in
+    ``checkpoint_dir``; drains what is available and stops (availableNow)
+    unless ``processing_time`` asks for a standing trigger."""
+    trigger = ({"availableNow": True} if processing_time is None
+               else {"processingTime": processing_time})
+    return (events.writeStream.queryName(query_name)
+            .foreachBatch(apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger).start())
 
 
 def run_pipeline(
@@ -75,10 +118,8 @@ def run_pipeline(
     log_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
     processing_time: str | None = None,
     max_files_per_trigger: int | None = None,
-    extract: bool = True,
     dedup_within_watermark: str | None = None,
     query_name: str = "tinyetl-cdc",
     transform_fn=None,
@@ -87,19 +128,20 @@ def run_pipeline(
     expire_every: int | None = None,
     expire_keep_last: int = 10,
     quarantine_dir: str | None = None,
-    max_html_bytes: int | None = None,
     auto_rescale_rows_per_bucket: int | None = None,
-    auto_rescale_max_buckets: int = 1 << 16,
     matview_dirs: list[str] | None = None,
-    matview_every: int = 1,
     source_format: str = "eventlog",
 ) -> PipelineRun:
     """Start the CDC stream into an existing LakeTable at ``table_path``.
 
+    The trigger is availableNow (drain the log, then stop) unless
+    ``processing_time`` (e.g. ``"10 seconds"``) asks for a standing one.
+
     ``source_format`` selects the landing-zone dialect: ``eventlog``
-    (native parquet segments), ``debezium``, ``maxwell`` or ``canal``
-    (json-lines envelopes via sources/debezium.py — same checkpointed
-    file-source offsets, so resume/replay semantics are identical).
+    (native parquet segments) or an envelope dialect of
+    ``sources.debezium.DIALECTS`` (json-lines via ``stream_envelopes`` —
+    same checkpointed file-source offsets, so resume/replay semantics are
+    identical).
 
     Maintenance runs inline on a cadence so long streams stay healthy
     without an operator:
@@ -116,11 +158,12 @@ def run_pipeline(
       themselves).
     - ``quarantine_dir``: dead-letter queue. Structurally invalid events
       (null/empty url, null event_seq/warc_ts, unknown op, payloadless
-      non-delete, oversized html — see streaming/quarantine.py) are
-      diverted there per batch with machine-readable reasons instead of
-      poisoning the merge or being dropped silently; the write is
-      replay-idempotent (per-batch overwrite), so exactly-once survives.
-      None disables (default: trusted-log deployments pay zero cost).
+      non-delete, html over quarantine.DEFAULT_MAX_HTML_BYTES — see
+      streaming/quarantine.py) are diverted there per batch with
+      machine-readable reasons instead of poisoning the merge or being
+      dropped silently; the write is replay-idempotent (per-batch
+      overwrite), so exactly-once survives. None disables (default:
+      trusted-log deployments pay zero cost).
     - ``auto_rescale_rows_per_bucket``: bucket-count evolution on a
       signal the merge already computes. When the table's mean rows per
       bucket (total_rows / num_buckets, both from the committed
@@ -130,14 +173,13 @@ def run_pipeline(
       never letting per-bucket row counts grow unboundedly as the
       stream runs from 10^6 toward 10^10 rows). Doubling halves the
       mean, so the trigger naturally fires ~once per table doubling;
-      ``auto_rescale_max_buckets`` caps runaway growth. None disables.
+      ``AUTO_RESCALE_MAX_BUCKETS`` caps runaway growth. None disables.
     - ``matview_dirs``: incremental materialized views
-      (streaming/matview.py) refreshed inline every ``matview_every``
-      batches. Each is a lake table created via ``matview.create_view``;
-      refresh is exactly-once in its own right (fenced on the source
-      snapshot version), so a crashed-and-replayed batch refreshes
-      once. A skipped cadence only delays — each refresh catches up on
-      every source commit since the last one. None disables.
+      (streaming/matview.py) refreshed inline after every batch. Each is
+      a lake table created via ``matview.create_view``; refresh is
+      exactly-once in its own right (fenced on the source snapshot
+      version), so a crashed-and-replayed batch refreshes once. None
+      disables.
     """
     table = LakeTable(spark, table_path)
     if not table.exists():
@@ -146,92 +188,69 @@ def run_pipeline(
 
     if source_format == "eventlog":
         events = stream_event_log(spark, log_dir, max_files_per_trigger)
-    elif source_format == "debezium":
-        from tinyetl_spark.sources.debezium import stream_debezium
+    else:
+        from tinyetl_spark.sources.debezium import stream_envelopes
         # with a DLQ configured, garbage envelopes pass through with
         # null fields (+ the raw string) so the quarantine rules divert
         # them with reasons instead of the parser dropping them blind
-        events = stream_debezium(
-            spark, log_dir, max_files_per_trigger=max_files_per_trigger,
+        events = stream_envelopes(
+            spark, log_dir, source_format, max_files_per_trigger,
             drop_invalid=quarantine_dir is None,
             raw_col="_raw_envelope" if quarantine_dir is not None else None)
-    elif source_format == "maxwell":
-        from tinyetl_spark.sources.debezium import stream_maxwell
-        events = stream_maxwell(
-            spark, log_dir, max_files_per_trigger=max_files_per_trigger,
-            drop_invalid=quarantine_dir is None,
-            raw_col="_raw_envelope" if quarantine_dir is not None else None)
-    elif source_format == "canal":
-        from tinyetl_spark.sources.debezium import stream_canal
-        events = stream_canal(
-            spark, log_dir, max_files_per_trigger=max_files_per_trigger,
-            drop_invalid=quarantine_dir is None,
-            raw_col="_raw_envelope" if quarantine_dir is not None else None)
-    else:
-        raise ValueError(f"unknown source_format: {source_format!r} "
-                         "(eventlog | debezium | maxwell | canal)")
     if dedup_within_watermark:
         events = (events.withWatermark("warc_ts", dedup_within_watermark)
                         .dropDuplicatesWithinWatermark(["url", "event_seq"]))
 
-    run_stats: list[MergeStats] = []
+    run = PipelineRun(query=None, stream_id=stream_id)
 
     def apply_batch(batch_df, batch_id: int):
-        # fresh handle per batch: foreachBatch may run on a recovered query
+        # fresh handle per batch: a batch may run on a recovered query
         t = LakeTable(spark, table_path)
         n_quarantined = 0
         if quarantine_dir is not None:
             from tinyetl_spark.streaming.quarantine import (
-                DEFAULT_MAX_HTML_BYTES, split_quarantine, write_quarantine)
-            batch_df, rejects = split_quarantine(
-                batch_df, max_html_bytes or DEFAULT_MAX_HTML_BYTES)
+                split_quarantine, write_quarantine)
+            batch_df, rejects = split_quarantine(batch_df)
             n_quarantined = write_quarantine(rejects, quarantine_dir,
                                              batch_id)
             if "_raw_envelope" in batch_df.columns:
                 # DLQ keeps the original wire bytes; the merge does not
                 batch_df = batch_df.drop("_raw_envelope")
         stats = merge_apply(t, batch_df, batch_id, stream_id=stream_id,
-                            extract=extract, transform_fn=transform_fn,
-                            mode=merge_mode)
+                            transform_fn=transform_fn, mode=merge_mode)
         stats.events_quarantined = n_quarantined
-        run_stats.append(stats)
-        if auto_compact_debt is not None and not stats.fenced:
+        run.stats.append(stats)
+        if not stats.fenced and (auto_compact_debt is not None
+                                 or auto_rescale_rows_per_bucket is not None):
+            # one snapshot read serves both checks; compaction hands back
+            # the snapshot it committed
             snap = t.snapshot()
-            debt = sum(1 for f in snap.files if f.get("delta"))
-            if debt >= auto_compact_debt:
-                t.compact_deltas()
-        if auto_rescale_rows_per_bucket is not None and not stats.fenced:
-            snap = t.snapshot()
-            total = int(snap.summary.get("total_rows") or 0)
-            if (snap.num_buckets < auto_rescale_max_buckets
-                    and total / snap.num_buckets
-                    >= auto_rescale_rows_per_bucket):
+            if (auto_compact_debt is not None
+                    and sum(1 for f in snap.files if f.get("delta"))
+                    >= auto_compact_debt):
+                snap = t.compact_deltas()
+            if (auto_rescale_rows_per_bucket is not None
+                    and snap.num_buckets < AUTO_RESCALE_MAX_BUCKETS
+                    and int(snap.summary.get("total_rows") or 0)
+                    / snap.num_buckets >= auto_rescale_rows_per_bucket):
                 t.rescale_buckets(min(snap.num_buckets * 2,
-                                      auto_rescale_max_buckets))
-        if matview_dirs and (batch_id + 1) % max(matview_every, 1) == 0:
+                                      AUTO_RESCALE_MAX_BUCKETS))
+        if matview_dirs:
             from tinyetl_spark.streaming.matview import refresh_view
             for mv in matview_dirs:
                 refresh_view(spark, t, LakeTable(spark, mv))
         if expire_every and (batch_id + 1) % expire_every == 0:
             t.expire_snapshots(keep_last=expire_keep_last)
 
-    writer = (events.writeStream
-              .queryName(query_name)
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    q = writer.start()
-    return PipelineRun(query=q, stream_id=stream_id, stats=run_stats)
+    run.query = _start_stream(events, apply_batch, checkpoint_dir,
+                              query_name, processing_time)
+    return run
 
 
 def run_to_completion(spark: SparkSession, log_dir: str, table_path: str,
                       checkpoint_dir: str, **kw) -> list[MergeStats]:
     """availableNow run: drain everything currently in the log, then stop."""
-    run = run_pipeline(spark, log_dir, table_path, checkpoint_dir,
-                       trigger_available_now=True, **kw)
+    run = run_pipeline(spark, log_dir, table_path, checkpoint_dir, **kw)
     run.await_termination()
     return run.stats
 
@@ -249,25 +268,14 @@ def replicate(spark: SparkSession, src_table: str, dst_table: str,
     LWW idempotency like any other event stream. Change rows already
     hold extracted text — the merge runs with extract=False and the
     mirror is byte-identical."""
-    from tinyetl_spark.streaming.cdf_source import register_cdf_source
-    register_cdf_source(spark)
+    from tinyetl_spark.streaming.cdf_source import stream_change_events
     dst = LakeTable(spark, dst_table)
     if not dst.exists():
         raise ValueError(f"target table does not exist: {dst_table}")
     stream_id = _stream_incarnation(checkpoint_dir)
     run_stats: list[MergeStats] = []
 
-    feed = (spark.readStream.format("tinyetl_cdf")
-            .option("path", src_table).load())
-
-    CDF_COLS = {"_change_type", "_commit_version", "_batch_id"}
-
-    def apply_batch(batch_df, batch_id: int):
-        events = (batch_df.withColumn(
-                      "op", F.when(F.col("_change_type") == "delete",
-                                   F.lit("delete")).otherwise(F.lit("update")))
-                  .drop("_change_type", "_commit_version", "_batch_id",
-                        "_deleted"))
+    def apply_batch(events, batch_id: int):
         t = LakeTable(spark, dst_table)
         # source schema evolution propagates: columns the feed carries
         # that the mirror lacks would otherwise be conform-DROPPED
@@ -278,10 +286,9 @@ def replicate(spark: SparkSession, src_table: str, dst_table: str,
         # merge then conforms normally.
         from tinyetl_spark.lake.table import _WIDEN_OK
         mirror = {f.name: f for f in t.snapshot().schema.fields}
-        skip = CDF_COLS | {"op"}
         extra, widened = [], False
         for f in events.schema.fields:
-            if f.name in skip:
+            if f.name == "op":
                 continue
             cur = mirror.get(f.name)
             if cur is None:
@@ -298,11 +305,8 @@ def replicate(spark: SparkSession, src_table: str, dst_table: str,
         run_stats.append(merge_apply(t, events, batch_id,
                                      stream_id=stream_id, extract=False))
 
-    q = (feed.writeStream.queryName(query_name)
-         .foreachBatch(apply_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _start_stream(stream_change_events(spark, src_table), apply_batch,
+                  checkpoint_dir, query_name).awaitTermination()
     return run_stats
 
 
@@ -371,15 +375,10 @@ def bootstrap_snapshot(table: LakeTable, snapshot, batch_id: int = 0,
 
 
 @dataclass
-class FanoutRun:
-    query: StreamingQuery
-    stream_id: str
+class FanoutRun(PipelineRun):
     # route -> MergeStats per batch, appended in batch order
     stats: dict[str, list[MergeStats]] = field(default_factory=dict)
     unrouted_events: int = 0
-
-    def await_termination(self, timeout: int | None = None):
-        return self.query.awaitTermination(timeout)
 
 
 def run_fanout_pipeline(
@@ -388,18 +387,14 @@ def run_fanout_pipeline(
     tables: dict[str, str],
     checkpoint_dir: str,
     route_col: str = "route",
-    trigger_available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-    extract: bool = True,
     unknown_route_dir: str | None = None,
     query_name: str = "tinyetl-cdc-fanout",
-    merge_mode: str = "auto",
 ) -> FanoutRun:
     """One CDC stream fanned out to MANY tables — the multi-table shape
     every real binlog tail has (a Debezium connector emits every table
     of the source database into one stream; the reference moves exactly
-    one table per job, src/config.rs job = source->target pair).
+    one table per job, src/config.rs job = source->target pair). The
+    trigger is availableNow and each table's merge runs in auto mode.
 
     The log carries a ``route_col`` string next to the change-event
     columns; each micro-batch is split by route and merge-applied to the
@@ -433,8 +428,7 @@ def run_fanout_pipeline(
     # copy — StructType.add would mutate the shared EVENTS_SCHEMA
     schema = StructType(list(EVENTS_SCHEMA.fields)
                         + [StructField(route_col, StringType(), False)])
-    events = stream_event_log(spark, log_dir, max_files_per_trigger,
-                              schema=schema)
+    events = stream_event_log(spark, log_dir, schema=schema)
 
     run = FanoutRun(query=None, stream_id=stream_id,
                     stats={r: [] for r in routes})
@@ -448,9 +442,7 @@ def run_fanout_pipeline(
                             .drop(route_col))
                 t = LakeTable(spark, path)
                 run.stats[route].append(
-                    merge_apply(t, slice_df, batch_id,
-                                stream_id=stream_id, extract=extract,
-                                mode=merge_mode))
+                    merge_apply(t, slice_df, batch_id, stream_id=stream_id))
             strays = batch_df.filter(
                 ~F.col(route_col).isin(*routes) | F.col(route_col).isNull())
             n = strays.count()
@@ -463,15 +455,7 @@ def run_fanout_pipeline(
         finally:
             batch_df.unpersist()
 
-    writer = (events.writeStream
-              .queryName(query_name)
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    run.query = writer.start()
+    run.query = _start_stream(events, apply_batch, checkpoint_dir, query_name)
     return run
 
 

@@ -21,8 +21,9 @@ With --log the job replays a pre-generated log (the bench protocol's
 deterministic one) instead of generating its own.
 
 ``events_per_sec`` uses the SAME definition as the primary protocol
-(bench.py `_cdc_round`): SUSTAINED rate = events over the sum of
-per-batch ``triggerExecution`` durations — every batch's full cost
+(bench.py `_cdc_round`): SUSTAINED rate = events over
+``PipelineRun.busy_seconds()``, the sum of per-batch
+``triggerExecution`` durations — every batch's full cost
 (incremental planning, dedup+extract+MERGE job, offset/commit
 bookkeeping) counts; the one-time stream init/teardown of this replay
 harness does not, because a production stream pays it once per deploy,
@@ -195,19 +196,15 @@ def main() -> None:
     t0 = time.time()
     run = run_pipeline(
         spark, log_dir, f"{work}/table", f"{work}/ckpt",
-        trigger_available_now=True,
         max_files_per_trigger=args.max_files_per_trigger,
         query_name="tinyetl-cdc-submit")
     run.await_termination()
     stats = run.stats
     elapsed = time.time() - t0
     total = sum(s.events_in for s in stats)
-    # sustained window: sum of per-batch triggerExecution (see module
-    # docstring) — identical to bench.py's primary-protocol definition
-    busy_ms = sum(p.durationMs.get("triggerExecution", 0)
-                  for p in run.query.recentProgress
-                  if (p.numInputRows or 0) > 0)
-    busy_s = busy_ms / 1000.0 if busy_ms else elapsed
+    # sustained window: PipelineRun.busy_seconds (see module docstring)
+    # — the same definition as bench.py's primary protocol
+    busy_s = run.busy_seconds() or elapsed
     final_rows = LakeTable(spark, f"{work}/table").read().count()
     out = {
         "events": total,
