@@ -229,24 +229,8 @@ def test_slot_mapping_matches_files(spark, tmpdir_path):
     skew-split merge, compact (plain and time-clustered), compact_deltas,
     rescale_buckets and overwrite — equals what is physically in each
     file. Buckets come from the routing (each bucket ROUTED to a chosen
-    partition via an inverse-murmur3 key), rows and ts_range from the
-    parquet footer."""
-    from tinyetl_spark.partitioning import inverse_slot_keys, murmur3_long
-    # murmur3_long == Spark's F.hash on longs (inverse_slot_keys relies on it)
-    vals = list(range(64)) + [-7, 1 << 40]
-    df = spark.createDataFrame([(v,) for v in vals], "b long")
-    got = {r["b"]: r["h"] for r in df.select("b", F.hash("b").alias("h")).collect()}
-    assert all(got[v] == murmur3_long(v) for v in vals)
-
-    # inverse keys round-trip through a REAL repartition: key p lands in
-    # partition p exactly
-    for slots in (5, 8, 32):
-        keys = inverse_slot_keys(slots)
-        kdf = spark.createDataFrame([(k,) for k in keys], "k long")
-        rows = (kdf.repartition(slots, "k")
-                   .withColumn("p", F.spark_partition_id()).collect())
-        assert {r["k"]: r["p"] for r in rows} == dict(zip(keys, range(slots)))
-
+    partition by repartitionById over its slot id), rows and ts_range
+    from the parquet footer."""
     t = make_table(spark, f"{tmpdir_path}/t", buckets=8)
     ev = datagen.change_events(spark, 3000, 300, seed=11)
     merge_apply(t, ev.filter("event_seq < 2000"), 0)
@@ -392,6 +376,42 @@ def test_mor_batch_is_exactly_one_job(spark, tmpdir_path):
     assert st.strategy == "mor" and st.events_in == 500
     assert n_jobs == 1
     assert_state_equal(t, ev)
+
+
+@pytest.mark.parametrize("case", ["cow", "mor", "skew_split"])
+def test_merge_plan_is_one_exchange_one_sort(spark, tmpdir_path,
+                                             monkeypatch, case):
+    """The merge's plan has ONE shuffle (repartitionById on the slot) and
+    ONE sort: the LWW lag() window, partitioned by the slot and ordered
+    like the sort, adds neither — for copy-on-write, merge-on-read and a
+    copy-on-write merge that splits a hot bucket over several slots."""
+    import re
+    if case == "skew_split":
+        t = make_table(spark, f"{tmpdir_path}/t", buckets=4)
+        hot_bucket, _, mk = _hot_bucket_batches(spark)
+        merge_apply(t, mk(0), 0)
+        batch, mode = mk(1_000_000), "cow"
+    else:
+        t = make_table(spark, f"{tmpdir_path}/t", buckets=8)
+        ev = datagen.change_events(spark, 1500, 200, seed=11)
+        merge_apply(t, ev.filter("event_seq < 750"), 0)
+        batch, mode = ev.filter("event_seq >= 750"), case
+    plans = []
+    write_routed = LakeTable.write_routed
+
+    def captured(self, routed, *a, **kw):
+        plans.append(routed._jdf.queryExecution().executedPlan().toString())
+        return write_routed(self, routed, *a, **kw)
+    monkeypatch.setattr(LakeTable, "write_routed", captured)
+    s = merge_apply(t, batch, 1, mode=mode)
+    monkeypatch.undo()
+    assert s.strategy == mode
+    if case == "skew_split":
+        assert len([f for f in t.snapshot().files
+                    if hot_bucket in f["buckets"]]) >= 2
+    [plan] = plans
+    nodes = re.findall(r"^[\s:|+-]*(Exchange|Sort|Window) ", plan, re.M)
+    assert nodes == ["Window", "Sort", "Exchange"], plan
 
 
 def test_empty_batch_is_a_noop_commit(spark, tmpdir_path):

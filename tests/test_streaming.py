@@ -393,6 +393,46 @@ def test_replication_propagates_type_widen(spark, tmpdir_path):
     assert got == {"u1": (4, 11.5), "u2": (2, 20.0), "u3": (3, 30.5)}
 
 
+def test_replicate_reads_version_pointer_twice(spark, tmpdir_path,
+                                               monkeypatch):
+    """A replicated batch reads the mirror's VERSION pointer only as
+    often as a plain merge does (plan + validated swap): the mirror's
+    schema evolution runs once before the stream starts, not per batch."""
+    from tests.test_merge import make_table
+    from tinyetl_spark.lake import merge_apply
+    from tinyetl_spark.streaming import pipeline
+
+    src, dst = f"{tmpdir_path}/src", f"{tmpdir_path}/dst"
+    t_src = make_table(spark, src, buckets=4)
+    make_table(spark, dst, buckets=4)
+    ev = datagen.change_events(spark, 600, 80, seed=8)
+    merge_apply(t_src, ev.filter("event_seq < 300"), 0)
+    merge_apply(t_src, ev.filter("event_seq >= 300"), 1)
+
+    reads, per_batch = [], []
+    current_version = LakeTable.current_version
+
+    def counted(self):
+        if self.root == dst:
+            reads.append(self.root)
+        return current_version(self)
+    start_stream = pipeline._start_stream
+
+    def counting_start(events, apply_batch, *a, **kw):
+        def apply_counted(batch, batch_id):
+            n0 = len(reads)
+            apply_batch(batch, batch_id)
+            per_batch.append(len(reads) - n0)
+        return start_stream(events, apply_counted, *a, **kw)
+    monkeypatch.setattr(LakeTable, "current_version", counted)
+    monkeypatch.setattr(pipeline, "_start_stream", counting_start)
+    stats = pipeline.replicate(spark, src, dst, f"{tmpdir_path}/ck")
+    monkeypatch.undo()
+    assert stats and all(s.events_in > 0 for s in stats)
+    assert per_batch == [2] * len(stats)
+    assert state(spark, src) == state(spark, dst)
+
+
 def test_stateful_run_output_pruning(spark, tmpdir_path):
     """Old runs' update-output dirs are pruned at run start (keep the
     most recent prior run for the caller's still-lazy DataFrame)."""

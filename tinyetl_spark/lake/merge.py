@@ -40,10 +40,11 @@ guard job so an empty micro-batch can never trigger a full-table rewrite:
 - the old per-batch histogram/count probe job is gone on the dense path
   (touch-all is assumed; it is a superset and always correct);
 - the single linear pipeline: union(current rows of touched buckets,
-  batch) -> ONE shuffle on the bucket -> sort within partitions (_bucket,
-  url ASC, warc_ts DESC, event_seq DESC) -> LWW dedup as a JVM lag()
-  window whose (partition, order) spec matches the shuffle+sort exactly
-  (Catalyst adds no exchange and no sort; verified in the plan) -> ONLY
+  batch) -> ONE shuffle on the bucket's slot -> sort within partitions
+  (_slot, _bucket, url ASC, warc_ts DESC, event_seq DESC) -> LWW dedup
+  as a JVM lag() window whose (partition, order) spec matches the
+  shuffle+sort exactly (Catalyst adds no exchange and no sort; pinned by
+  tests/test_merge.py::test_merge_plan_is_one_exchange_one_sort) -> ONLY
   the winners cross into a pandas pass (stats + vectorized text
   extraction for winning batch rows) -> plain parquet write with no
   second exchange (no Hive partitionBy — measured ~10x the write cost
@@ -56,15 +57,14 @@ guard job so an empty micro-batch can never trigger a full-table rewrite:
   accumulator SNAPSHOT (the fused pass registers its slot's
   ``[rows, events, deletes]`` per bucket once; a retried task *replaces*
   its slot entry instead of adding, so stats stay exact under retries).
-  Each bucket is ROUTED to a chosen partition via an inverse-murmur3 key
-  (a driver-side bit-exact replica of Spark's HashPartitioning picks the
-  key), so partitions are evenly loaded (COW: one bucket = one partition
-  = one file) instead of balls-in-bins. The write goes through
-  ``LakeTable.write_routed``, the one writer of table data: a file's
-  manifest entry lists the buckets routed to its slot that the stats pass
-  saw rows for, and takes its row count and ``warc_ts`` zone map from the
-  parquet footer (see tests/test_merge.py::
-  test_slot_mapping_matches_files). Every file carries a key bloom
+  Each bucket is ROUTED to a chosen slot by ``repartitionById`` over a
+  driver-built slot map (``table.slot_column``), so partitions are evenly
+  loaded (COW: one bucket = one partition = one file) instead of
+  balls-in-bins. The write goes through ``LakeTable.write_routed``, the
+  one writer of table data: a file's manifest entry lists the buckets
+  routed to its slot that the stats pass saw rows for, and takes its row
+  count and ``warc_ts`` zone map from the parquet footer (see
+  tests/test_merge.py::test_slot_mapping_matches_files). Every file carries a key bloom
   filter, so ``lookup`` skips row groups of merge-written files too.
 
 Every call records its driver-side segment marks (``snapshot``,
@@ -94,7 +94,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from tinyetl_spark.lake.table import (LakeTable, bucket_closure,
-                                     bucket_column, conform, slotkey_column)
+                                     bucket_column, conform, slot_column)
 
 
 @dataclass
@@ -122,6 +122,15 @@ class MergeStats:
 
 FENCE_PREFIX = "fence."
 LAST_IN_PROP = "last_events_in"
+# auto mode picks merge-on-read only while the table holds at least this
+# many times the previous batch's events (rewriting it would dwarf the
+# batch) and the table has fewer than this many delta files per bucket
+MOR_TABLE_BATCH_RATIO = 4.0
+MAX_DELTA_FILES_PER_BUCKET = 4
+# a bucket whose written-row share in the previous commit's lineage is at
+# least this many times the mean is split over up to SKEW_SPLIT_CAP slots
+SKEW_SPLIT_THRESHOLD = 2.0
+SKEW_SPLIT_CAP = 16
 
 
 class _SlotStatsParam(AccumulatorParam):
@@ -138,17 +147,17 @@ class _SlotStatsParam(AccumulatorParam):
         return a
 
 
-def _skew_splits(snap, touched: set[int], threshold: float,
-                 cap: int) -> dict[int, int]:
+def _skew_splits(snap, touched: set[int]) -> dict[int, int]:
     """bucket -> split count, from the PREVIOUS commit's lineage (zero
     jobs — the skew signal is already on the driver). A bucket whose last
-    written-ROW share was >= ``threshold`` x the mean over this batch's
-    touched set gets ceil(share/mean) partitions, capped. Rows ~ url
-    cardinality, which is exactly the skew component a url-salt can
-    spread (a single hot URL's events must stay in one partition for LWW
-    locality regardless). One hot domain funnelled into one bucket
-    otherwise serializes that bucket's whole sort+window+extract on a
-    single core — the stage tail at 100x scale."""
+    written-ROW share was >= ``SKEW_SPLIT_THRESHOLD`` x the mean over the
+    lineage's buckets gets ceil(share/mean) partitions, capped at
+    ``SKEW_SPLIT_CAP``. Rows ~ url cardinality, which is exactly the skew
+    component a url-salt can spread (a single hot URL's events must stay
+    in one partition for LWW locality regardless). One hot domain
+    funnelled into one bucket otherwise serializes that bucket's whole
+    sort+window+extract on a single core — the stage tail at 100x
+    scale."""
     ev = {int(r["bucket"]): int(r.get("rows") or 0) for r in snap.lineage}
     total = sum(ev.values())
     if not total or not touched:
@@ -162,8 +171,8 @@ def _skew_splits(snap, touched: set[int], threshold: float,
     out = {}
     for b in touched:
         e = ev.get(b, 0)
-        if e >= threshold * mean:
-            n = min(math.ceil(e / mean), cap)
+        if e >= SKEW_SPLIT_THRESHOLD * mean:
+            n = min(math.ceil(e / mean), SKEW_SPLIT_CAP)
             if n > 1:
                 out[b] = int(n)
     return out
@@ -203,11 +212,7 @@ def _commit_zero_event(table: LakeTable, snap, stream_id: str, batch_id: int,
 def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
                 stream_id: str = "default",
                 extract: bool = True, transform_fn=None,
-                mode: str = "auto",
-                mor_table_batch_ratio: float = 4.0,
-                max_delta_files: int | None = None,
-                skew_split_threshold: float = 2.0,
-                skew_split_cap: int = 16) -> MergeStats:
+                mode: str = "auto") -> MergeStats:
     """Apply one micro-batch of change events to the table.
 
     ``batch`` columns: event_seq, url, warc_ts, op, html, lang (+ extras
@@ -220,17 +225,19 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
 
     ``mode``: 'cow' | 'mor' | 'auto'. Auto picks merge-on-read when the
     batch is dense (previous merge touched most buckets) AND the table is
-    >= ``mor_table_batch_ratio`` x the previous batch size (rewriting it
+    >= ``MOR_TABLE_BATCH_RATIO`` x the previous batch size (rewriting it
     would dwarf the batch), AND the accumulated delta-file debt is below
-    ``max_delta_files`` (default 4*num_buckets) — past that the next merge
-    does copy-on-write, which absorbs all deltas of the touched buckets.
+    ``MAX_DELTA_FILES_PER_BUCKET`` x num_buckets — past that the next
+    merge does copy-on-write, which absorbs all deltas of the touched
+    buckets.
 
-    ``skew_split_threshold`` / ``skew_split_cap``: a bucket whose
-    written-row share in the PREVIOUS commit's lineage was >= threshold x
-    the mean is spread over up to ``cap`` sort partitions, salted by
-    ``pmod(xxhash64(key), nsplit)`` — key -> partition stays functional,
-    so LWW winner locality (and the one-job plan) is unchanged while a
-    hot domain's bucket no longer serializes on one core. 0 disables.
+    A bucket whose written-row share in the PREVIOUS commit's lineage was
+    >= ``SKEW_SPLIT_THRESHOLD`` x the mean is spread over up to
+    ``SKEW_SPLIT_CAP`` sort partitions, salted by
+    ``pmod(xxhash64(key, 1), nsplit)`` — key -> partition stays
+    functional, so LWW winner locality (and the one-job plan) is
+    unchanged while a hot domain's bucket no longer serializes on one
+    core.
     """
     profile: dict[str, float] = {}
     t_last = [time.time()]
@@ -264,12 +271,12 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     table_rows = int(snap.summary.get("total_rows", 0))
     prev_in = int(snap.properties.get(LAST_IN_PROP, 0))
     delta_debt = sum(1 for f in snap.files if f.get("delta"))
-    debt_cap = max_delta_files if max_delta_files is not None else 4 * num_b
     if mode == "mor":
         use_mor = True
     elif mode == "auto":
-        use_mor = (dense and delta_debt < debt_cap
-                   and table_rows > mor_table_batch_ratio * max(prev_in, 1))
+        use_mor = (dense
+                   and delta_debt < MAX_DELTA_FILES_PER_BUCKET * num_b
+                   and table_rows > MOR_TABLE_BATCH_RATIO * max(prev_in, 1))
     else:
         use_mor = False
 
@@ -329,12 +336,12 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
         touched = bucket_closure(snap.files, touched)
 
     # ---- THE job (ONE linear pipeline, ONE shuffle, no caching):
-    # [current(touched) ∪] batch -> repartition by bucket -> sort within
-    # partitions by (url ASC, warc_ts DESC, event_seq DESC, _src ASC) ->
-    # LWW dedup as a JVM lag() window over that same order -> one
-    # vectorized mapInPandas pass over the winners only (text extraction
-    # for winning batch rows + per-bucket stats) -> parquet write with NO
-    # second shuffle.
+    # [current(touched) ∪] batch -> route each bucket to its slot -> sort
+    # within partitions by (_slot, _bucket, url ASC, warc_ts DESC,
+    # event_seq DESC, _src ASC) -> LWW dedup as a JVM lag() window over
+    # that same order -> one vectorized mapInPandas pass over the winners
+    # only (text extraction for winning batch rows + per-bucket stats) ->
+    # parquet write with NO second shuffle.
     #
     # Design note: expressing LWW as Window.partitionBy(url) forces a
     # second exchange (Catalyst can't prove hash(bucket(url)) clusters
@@ -360,12 +367,11 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # must not fan out into num_buckets tiny files per micro-batch.
     #
     # Skew-aware splitting: a bucket the previous commit's lineage marks
-    # hot (>= skew_split_threshold x the mean row share) is spread over
-    # ceil(share/mean) partitions via a key-salted second routing key —
-    # url -> (bucket, salt) -> slot stays functional, so LWW locality is
-    # preserved and the plan shape (1 shuffle, 1 sort, 1 job) unchanged.
-    nsplit = _skew_splits(snap, touched, skew_split_threshold,
-                          skew_split_cap) if skew_split_threshold else {}
+    # hot (>= SKEW_SPLIT_THRESHOLD x the mean row share) is spread over
+    # ceil(share/mean) partitions by a key salt — url -> (bucket, salt) ->
+    # slot stays functional, so LWW locality is preserved and the plan
+    # shape (1 shuffle, 1 sort, 1 job) unchanged.
+    nsplit = _skew_splits(snap, touched)
     if use_mor:
         slots = max(1, min(num_b, (max(prev_in, 1) + 249_999) // 250_000))
         nsplit = {b: min(n, slots) for b, n in nsplit.items()
@@ -377,18 +383,14 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
                  for j in range(nsplit.get(b, 1))]
         slots = max(len(pairs), 1)
     # (bucket, split) -> shuffle partition is a CHOSEN even assignment,
-    # never balls-in-bins: repartition(slots, "_bucket") hashes B bucket
-    # ids into B partitions, leaving ~B/e partitions EMPTY and piling 2-3
-    # buckets onto others (measured at B=32: 12 empty, max 3) — the 2-3x
-    # straggler task then idles the whole stage tail at every micro-batch
-    # (the single biggest scaling loss found by profiling: reduce-stage
-    # max task 10.3s vs p50 3.6s at 8 cores). _slotkey carries an
-    # inverse-murmur3 key that routes bucket b to partition
-    # bucket_slot[b] EXACTLY: COW gets a bijection (one bucket = one
-    # partition = one file, so the touch-closure stays trivial; a SPLIT
-    # hot bucket writes nsplit files, each still holding only that
-    # bucket), MOR round-robins its buckets over the batch-sized slot
-    # count (partition loads within one bucket of even).
+    # never balls-in-bins (see slot_column; at B=32 hashing left 12
+    # partitions empty and the reduce-stage max task ran 10.3s vs p50 3.6s
+    # at 8 cores). repartitionById sends a row to partition _slot itself:
+    # COW gets a bijection (one bucket = one partition = one file, so the
+    # touch-closure stays trivial; a SPLIT hot bucket writes nsplit files,
+    # each still holding only that bucket), MOR round-robins its buckets
+    # over the batch-sized slot count (partition loads within one bucket
+    # of even).
     pair_slot = {p: i % slots for i, p in enumerate(pairs)}
     bucket_slot = {b: pair_slot[(b, 0)] for b in touched}
     splits = {b: [pair_slot[(b, j)] for j in range(n)]
@@ -398,12 +400,11 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # events_in rides the scan as an observed metric — no counting job.
     unioned = (unioned_src
                .withColumn("_bucket", bucket)
-               .withColumn("_slotkey", slotkey_column(num_b, slots,
-                                                      bucket_slot,
-                                                      splits, key))
+               .withColumn("_slot", slot_column(num_b, bucket_slot, splits,
+                                                key))
                .observe(obs, F.sum("_src").cast("long").alias("events_in"))
-               .repartition(slots, "_slotkey")
-               .sortWithinPartitions(F.col("_slotkey").asc(),
+               .repartitionById(slots, "_slot")
+               .sortWithinPartitions(F.col("_slot").asc(),
                                      F.col("_bucket").asc(),
                                      F.col(key).asc(),
                                      F.col("warc_ts").desc(),
@@ -417,11 +418,11 @@ def merge_apply(table: LakeTable, batch: DataFrame, batch_id: int,
     # deduping in pandas, and the JVM window is Tungsten-tight. On this
     # host that traffic is the scaling-limiting shared resource (measured:
     # identical work costs +17% core-seconds at 8 threads, +28% at 16).
-    # partitionBy(_slotkey) is safe for LWW: url -> bucket -> slotkey is
+    # partitionBy(_slot) is safe for LWW: url -> bucket -> slot is
     # functional, so every row of a url lands in one window partition and
     # the (…, url ASC, warc_ts DESC, event_seq DESC, _src ASC) order keeps
-    # each url's rows contiguous with its winner first, exactly as before.
-    w = Window.partitionBy("_slotkey").orderBy(
+    # each url's rows contiguous with its winner first.
+    w = Window.partitionBy("_slot").orderBy(
         F.col("_bucket").asc(),
         F.col(key).asc(), F.col("warc_ts").desc(),
         F.col("event_seq").desc(), F.col("_src").asc())

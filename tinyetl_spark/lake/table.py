@@ -17,8 +17,9 @@ Layout on disk::
     <root>/data/snap-<N>-<id>/part-<slot>-*.parquet
 
 Every data file is written by ``LakeTable.write_routed``: the writer's
-rows arrive routed so that shuffle partition k holds exactly slot k, and
-partition k becomes ``part-<k>-*``. A file's manifest entry takes its
+rows arrive routed by ``repartitionById(slots, "_slot")`` over a chosen
+slot map (``slot_column``), so shuffle partition k holds exactly slot k,
+and partition k becomes ``part-<k>-*``. A file's manifest entry takes its
 bucket set from that routing and its row count and ``warc_ts`` bounds
 from the parquet footer the write just closed. Each row also carries its
 bucket in a ``_bucket`` column (the residual filter for multi-bucket
@@ -148,31 +149,30 @@ def conform(df: DataFrame, schema: StructType) -> DataFrame:
     return df.select(*cols)
 
 
-# (num_ids, slots, assignment, splits, key_col, id_col) -> the _slotkey
-# Column. A steady-state stream re-derives the SAME routing every dense
-# batch; building the long[] literal costs ~0.5 s of py4j transfer at
+# (num_ids, assignment, splits, key_col, id_col) -> the _slot Column. A
+# steady-state stream re-derives the SAME routing every dense batch;
+# building the int[] literal costs ~0.5 s of py4j transfer at
 # num_buckets=4096, so the Column (an unbound expression, safe to reuse
 # across DataFrames) is cached. Bounded: sparse batches with changing
 # touched-sets evict oldest.
-_SLOTKEY_CACHE: dict[tuple, Any] = {}
+_SLOT_CACHE: dict[tuple, Any] = {}
 
 
-def slotkey_column(num_ids: int, slots: int, id_slot: dict[int, int],
-                   splits: dict[int, list[int]] | None = None,
-                   key_col: str | None = None, id_col: str = "_bucket"):
-    """Column routing each ``id_col`` value to its chosen shuffle
-    partition: ``repartition(slots, "_slotkey")`` then sends id i to
-    partition ``id_slot[i]`` EXACTLY. Hash-repartitioning on the id itself
-    is balls-in-bins — ~1/e of partitions end up empty and 2-3 ids pile
-    onto others, so the straggler task idles the stage tail. The column is
-    element_at over a long[] literal of inverse-murmur3 keys (ONE Literal
-    node — a python-list literal becomes a num_ids-child array()
-    constructor costing ~2.3 s of per-batch plan analysis at 4096
-    buckets).
+def slot_column(num_ids: int, id_slot: dict[int, int],
+                splits: dict[int, list[int]] | None = None,
+                key_col: str | None = None, id_col: str = "_bucket"):
+    """Column holding each row's chosen write slot, for
+    ``repartitionById(slots, "_slot")``: id i goes to slot ``id_slot[i]``.
+    A chosen map, not a hash of the id: hashing B ids into B partitions
+    is balls-in-bins, leaving ~1/e of them empty and piling 2-3 ids onto
+    others, so the straggler task idles the stage tail. The column is
+    element_at over an int[] literal of slot ids (ONE Literal node — a
+    python-list literal becomes a num_ids-child array() constructor
+    costing ~2.3 s of per-batch plan analysis at 4096 buckets).
 
-    ``splits`` spreads a HOT id over several partitions: its rows are
-    salted by ``pmod(xxhash64(key, 1), nsplit)`` onto the id's slot list.
-    The salt is a pure function of the KEY, so every key's rows still land
+    ``splits`` spreads a HOT id over several slots: its rows are salted
+    by ``pmod(xxhash64(key, 1), nsplit)`` onto the id's slot list. The
+    salt is a pure function of the KEY, so every key's rows still land
     in exactly one sort partition — the merge's LWW window needs no
     cross-split resolution and its hot path stays one job. The salt hash
     is SEEDED (extra lit(1) column) to decorrelate it from the bucket id
@@ -182,31 +182,26 @@ def slotkey_column(num_ids: int, slots: int, id_slot: dict[int, int],
     fully determined by hash % num_buckets — and the skew split silently
     routes every row back to one partition."""
     splits = splits or {}
-    ck = (num_ids, slots, tuple(sorted(id_slot.items())),
+    ck = (num_ids, tuple(sorted(id_slot.items())),
           tuple(sorted((b, tuple(sl)) for b, sl in splits.items())), key_col,
           id_col)
-    col = _SLOTKEY_CACHE.get(ck)
+    col = _SLOT_CACHE.get(ck)
     if col is None:
         import numpy as np
-
-        from tinyetl_spark.partitioning import inverse_slot_keys
-        slot_keys = inverse_slot_keys(slots)
-        key_arr = np.zeros(num_ids, dtype=np.int64)
+        slot_arr = np.zeros(num_ids, dtype=np.int32)
         for i, s in id_slot.items():
-            key_arr[i] = slot_keys[s]
-        col = (F.element_at(F.lit(key_arr), (F.col(id_col) + 1).cast("int"))
-                .cast("long"))  # murmur3 hashLong, not hashInt
+            slot_arr[i] = s
+        col = F.element_at(F.lit(slot_arr), (F.col(id_col) + 1).cast("int"))
         for i, slot_list in sorted(splits.items()):
-            sub_keys = np.array([slot_keys[s] for s in slot_list],
-                                dtype=np.int64)
             sub = (F.pmod(F.xxhash64(F.col(key_col), F.lit(1)),
                           F.lit(len(slot_list))) + 1).cast("int")
             col = F.when(F.col(id_col) == F.lit(i),
-                         F.element_at(F.lit(sub_keys), sub).cast("long")
+                         F.element_at(F.lit(np.array(slot_list,
+                                                     dtype=np.int32)), sub)
                          ).otherwise(col)
-        if len(_SLOTKEY_CACHE) >= 8:
-            _SLOTKEY_CACHE.pop(next(iter(_SLOTKEY_CACHE)))
-        _SLOTKEY_CACHE[ck] = col
+        if len(_SLOT_CACHE) >= 8:
+            _SLOT_CACHE.pop(next(iter(_SLOT_CACHE)))
+        _SLOT_CACHE[ck] = col
     return col
 
 
@@ -630,15 +625,16 @@ class LakeTable:
         """THE writer of table data; returns the manifest entries of the
         files it wrote into ``out_dir`` for the commit on top of ``snap``
         (a write that produced no rows leaves no directory behind).
-        ``routed`` (table columns + ``_bucket``) is already
-        repartitioned so that shuffle partition k holds exactly slot k's
-        rows. The plain parquet write (no Hive partitionBy — measured ~10x
-        the cost of the write itself for many small partitions) turns
-        partition k into ``part-<k>-*.parquet``, and ``buckets_of(k)``,
-        called after the write, names the buckets in it. The rest of each
-        entry comes from the footer of the file just closed, as Iceberg
-        fills a data file's record count and bounds: ``rows`` from its row
-        count and ``ts_range`` from the ``warc_ts`` min/max statistics (the
+        ``routed`` (table columns + ``_bucket``) is already routed by
+        ``repartitionById`` over a chosen slot map (``slot_column``), so
+        shuffle partition k holds exactly slot k's rows. The plain parquet
+        write (no Hive partitionBy — measured ~10x the cost of the write
+        itself for many small partitions) turns partition k into
+        ``part-<k>-*.parquet``, and ``buckets_of(k)``, called after the
+        write, names the buckets in it. The rest of each entry comes from
+        the footer of the file just closed, as Iceberg fills a data file's
+        record count and bounds: ``rows`` from its row count and
+        ``ts_range`` from the ``warc_ts`` min/max statistics (the
         file-level zone map ``read(ts_range=...)`` prunes on).
 
         The write sets two confs in the plan's own session (a foreachBatch
@@ -726,15 +722,15 @@ class LakeTable:
                     for r, b in enumerate(order) for j in range(k)}
         routed = (df.withColumn("_bucket", bucket_column(snap.key_col, nb))
                     .withColumn("_cid", cid)
-                    .withColumn("_slotkey", slotkey_column(
-                        nb * k, slots, cid_slot, id_col="_cid"))
-                    .repartition(slots, "_slotkey"))
+                    .withColumn("_slot", slot_column(nb * k, cid_slot,
+                                                     id_col="_cid"))
+                    .repartitionById(slots, "_slot"))
         if cluster_by_ts:
             routed = routed.sortWithinPartitions("warc_ts")
         est_rows = sum(int(f.get("rows") or 0) for f in snap.files
                        if buckets is None or set(f["buckets"]) & buckets)
         return self.write_routed(
-            routed.drop("_cid", "_slotkey"), snap,
+            routed.drop("_cid", "_slot"), snap,
             self.new_data_dir(version), lambda s: [order[s // k]],
             est_rows / slots)
 

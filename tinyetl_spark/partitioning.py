@@ -1,152 +1,16 @@
-"""Partitioning & skew control — the explicit knobs the north rule asks for.
+"""Driver-side replica of the bucket transform.
 
-The reference is single-threaded (no partitioning at all); these helpers
-are the Spark-native policies the CDC engine and the training-data
-operators share:
-
-- ``salted_repartition``: break a hot key (one domain = millions of urls)
-  across ``salt_n`` sub-partitions; use for groupBys keyed on a skewed
-  column. Joins against salted keys need the dim side exploded with
-  ``explode_salt`` — or just AQE skew-join, which the session enables.
-- ``skew_ratio``: per-partition-key histogram metric (max/avg) — the
-  number the lineage records each micro-batch.
-- ``bucket_for``: the engine-wide bucket transform (same function as
-  LakeTable.bucket_expr, importable without a table handle).
+Every table buckets its rows by ``pmod(xxhash64(key), N)``
+(``lake.table.bucket_column``). ``xxh64`` is a pure-Python XXH64 that
+matches Spark's ``xxhash64`` byte for byte, and ``bucket_of`` turns it
+into the bucket of one key, so a point lookup prunes to that bucket
+without running a Spark job.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-
-
-def bucket_for(col: Column, num_buckets: int) -> Column:
-    """pmod(xxhash64(key), N) — consistent with LakeTable's layout."""
-    return F.pmod(F.xxhash64(col), F.lit(num_buckets))
-
-
-# --------------------------------------------------- shuffle-slot arithmetic
-# Driver-side replica of Spark's HashPartitioning for a single LONG column:
-# partition index = pmod(Murmur3_x86_32.hashLong(v, seed=42), numPartitions).
-# This lets the merge compute WHICH output partition (and therefore which
-# part-NNNNN file) every bucket lands in without reading anything back —
-# verified bit-exact against F.hash()/repartition() in tests/test_merge.py.
-
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def _mix_k1(k1: int) -> int:
-    k1 = (k1 * 0xCC9E2D51) & _M32
-    return (_rotl32(k1, 15) * 0x1B873593) & _M32
-
-
-def _mix_h1(h1: int, k1: int) -> int:
-    h1 = _rotl32(h1 ^ k1, 13)
-    return (h1 * 5 + 0xE6546B64) & _M32
-
-
-def murmur3_long(v: int, seed: int = 42) -> int:
-    """Murmur3_x86_32.hashLong — equals Spark's ``F.hash(long_col)``."""
-    v &= (1 << 64) - 1
-    h1 = _mix_h1(seed, _mix_k1(v & _M32))
-    h1 = _mix_h1(h1, _mix_k1((v >> 32) & _M32))
-    h1 ^= 8
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def slot_for_bucket(bucket: int, slots: int) -> int:
-    """Output partition index of ``repartition(slots, "_bucket")`` for a
-    row whose _bucket == bucket (pmod of the signed murmur3 hash)."""
-    h = murmur3_long(bucket)
-    return ((h % slots) + slots) % slots
-
-
-def inverse_slot_keys(slots: int) -> list[int]:
-    """keys[p] = smallest non-negative long k with
-    ``slot_for_bucket(k, slots) == p`` — an inverse table for Spark's
-    HashPartitioning. ``repartition(slots, key_col)`` sends a row whose
-    key_col == keys[p] to partition p EXACTLY, which turns the
-    balls-in-bins bucket→partition assignment of ``repartition(slots,
-    "_bucket")`` into a chosen bijection. Hashing B distinct bucket ids
-    into B partitions leaves ~B/e partitions empty and piles 2-3 buckets
-    onto others (measured at B=32: 12 empty, max 3) — the straggler task
-    then runs 2-3x the median and idles the whole stage tail. Driver-side
-    coupon-collector scan, O(slots·ln slots) murmur evaluations (~34k for
-    4096 slots)."""
-    keys: list[int | None] = [None] * slots
-    found, k = 0, 0
-    while found < slots:
-        p = slot_for_bucket(k, slots)
-        if keys[p] is None:
-            keys[p] = k
-            found += 1
-        k += 1
-    return keys  # type: ignore[return-value]
-
-
-def with_salt(df: DataFrame, key: str, salt_n: int = 8,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic row-level salt (hash of the whole row id-space would
-    need an id; xxhash64 over all columns is stable and cheap)."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                         F.lit(salt_n)))
-
-
-def salted_repartition(df: DataFrame, key: str, num_partitions: int,
-                       salt_n: int = 8) -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over ``salt_n``
-    partitions. Downstream per-key aggregation must be two-phase:
-    aggregate (key, salt) partially, then aggregate key."""
-    salted = with_salt(df, key, salt_n)
-    return salted.repartition(num_partitions, F.col(key), F.col("_salt"))
-
-
-def two_phase_count(df: DataFrame, key: str, salt_n: int = 8) -> DataFrame:
-    """Skew-safe count per key: partial agg on (key, salt) → final on key.
-    (Spark's hash agg already does map-side partials; this pattern matters
-    for agg functions without partial pushdown or for foldable state.)"""
-    salted = with_salt(df, key, salt_n)
-    partial = salted.groupBy(key, "_salt").agg(F.count("*").alias("c"))
-    return partial.groupBy(key).agg(F.sum("c").alias("count"))
-
-
-def explode_salt(dim: DataFrame, salt_n: int = 8,
-                 salt_col: str = "_salt") -> DataFrame:
-    """Replicate a (small) dimension across every salt value so it joins
-    against a salted fact on (key, salt)."""
-    return dim.withColumn(
-        salt_col, F.explode(F.array(*[F.lit(i) for i in range(salt_n)])))
-
-
-def skew_ratio(df: DataFrame, key_expr: Column) -> float:
-    """max(per-key count) / avg(per-key count) — 1.0 means uniform."""
-    row = (df.groupBy(key_expr.alias("k")).count()
-             .agg(F.max("count").alias("mx"), F.avg("count").alias("av"))
-             .collect()[0])
-    return float(row["mx"] / row["av"]) if row["av"] else 0.0
-
-
-def partition_histogram(df: DataFrame, key_expr: Column) -> DataFrame:
-    """Rows per partition key — the lineage/debugging view."""
-    return (df.groupBy(key_expr.alias("k")).count()
-              .orderBy(F.desc("count")))
-
-
-# ------------------------------------------------------- driver-side XXH64
-# Pure-Python XXH64 (public spec; seed 42 = Spark's xxhash64 seed), the
-# driver-side replica of the bucket transform pmod(xxhash64(key), N).
-# Verified byte-for-byte against F.xxhash64 in tests/test_operators.py.
-# Lets a point lookup compute its ONE bucket without running a job.
+# XXH64 per its public spec; seed 42 is Spark's xxhash64 seed. Checked
+# byte for byte against F.xxhash64 in tests/test_operators.py.
 
 _P1x = 0x9E3779B185EBCA87
 _P2x = 0xC2B2AE3D27D4EB4F

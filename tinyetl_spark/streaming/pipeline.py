@@ -274,39 +274,40 @@ def replicate(spark: SparkSession, src_table: str, dst_table: str,
         raise ValueError(f"target table does not exist: {dst_table}")
     stream_id = _stream_incarnation(checkpoint_dir)
     run_stats: list[MergeStats] = []
+    events = stream_change_events(spark, src_table)
+    # source schema evolution propagates: columns the feed carries that
+    # the mirror lacks would otherwise be conform-DROPPED silently, and a
+    # feed column WIDER than the mirror's (int→long upstream) would be
+    # conform-NARROWED — overflow values silently wrap. Evolve the mirror
+    # first: add new columns, widen dtypes along _WIDEN_OK (same rules as
+    # the source's own evolution); the merge then conforms normally. The
+    # feed pins its schema for the query's lifetime (the source refuses
+    # to run on past a mid-stream evolution), so once per run suffices.
+    from tinyetl_spark.lake.table import _WIDEN_OK
+    mirror = {f.name: f for f in dst.snapshot().schema.fields}
+    extra, widened = [], False
+    for f in events.schema.fields:
+        if f.name == "op":
+            continue
+        cur = mirror.get(f.name)
+        if cur is None:
+            extra.append(f)
+        elif (cur.dataType != f.dataType
+              and (cur.dataType.typeName(),
+                   f.dataType.typeName()) in _WIDEN_OK):
+            mirror[f.name] = cur.__class__(f.name, f.dataType,
+                                           cur.nullable, cur.metadata)
+            widened = True
+    if extra or widened:
+        from pyspark.sql.types import StructType as _ST
+        dst.evolve_schema(_ST(list(mirror.values()) + extra))
 
-    def apply_batch(events, batch_id: int):
-        t = LakeTable(spark, dst_table)
-        # source schema evolution propagates: columns the feed carries
-        # that the mirror lacks would otherwise be conform-DROPPED
-        # silently, and a feed column WIDER than the mirror's (int→long
-        # upstream) would be conform-NARROWED — overflow values silently
-        # wrap. Evolve the mirror first: add new columns, widen dtypes
-        # along _WIDEN_OK (same rules as the source's own evolution); the
-        # merge then conforms normally.
-        from tinyetl_spark.lake.table import _WIDEN_OK
-        mirror = {f.name: f for f in t.snapshot().schema.fields}
-        extra, widened = [], False
-        for f in events.schema.fields:
-            if f.name == "op":
-                continue
-            cur = mirror.get(f.name)
-            if cur is None:
-                extra.append(f)
-            elif (cur.dataType != f.dataType
-                  and (cur.dataType.typeName(),
-                       f.dataType.typeName()) in _WIDEN_OK):
-                mirror[f.name] = cur.__class__(f.name, f.dataType,
-                                               cur.nullable, cur.metadata)
-                widened = True
-        if extra or widened:
-            from pyspark.sql.types import StructType as _ST
-            t.evolve_schema(_ST(list(mirror.values()) + extra))
-        run_stats.append(merge_apply(t, events, batch_id,
+    def apply_batch(batch, batch_id: int):
+        run_stats.append(merge_apply(dst, batch, batch_id,
                                      stream_id=stream_id, extract=False))
 
-    _start_stream(stream_change_events(spark, src_table), apply_batch,
-                  checkpoint_dir, query_name).awaitTermination()
+    _start_stream(events, apply_batch, checkpoint_dir,
+                  query_name).awaitTermination()
     return run_stats
 
 
